@@ -78,7 +78,9 @@ def main() -> int:
         tail = [ln for ln in out.splitlines() if ln.strip()][-1:]
         print(f"shard {i} ({len(shard)} files): rc={p.returncode} "
               f"{tail[0] if tail else ''}", flush=True)
-        if p.returncode != 0:
+        # rc 5 = "no tests collected" (e.g. every test in the shard is
+        # deselected by the default profile's marker filter): not a failure
+        if p.returncode not in (0, 5):
             ok = False
             print(out[-4000:])
     print(f"fast_gate: {'PASS' if ok else 'FAIL'} in "
@@ -87,5 +89,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    main = main()
-    sys.exit(main)
+    sys.exit(main())

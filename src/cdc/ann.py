@@ -336,7 +336,9 @@ def retrain_into(spark: SparkSession, old: IvfIndex, new_root: str,
     ``search(adc=True)`` caller."""
     new = IvfIndex(new_root,
                    n_partitions=n_partitions or old.table.n_partitions)
-    vecs = old.table.read(spark).select("vec_id", "embedding")
+    vecs = old.table.read(spark)   # None before the first commit
+    if vecs is not None:
+        vecs = vecs.select("vec_id", "embedding")
     old_cb = old.pq_codebooks(spark)
     if old_cb is not None and pq_m is None:
         pq_m, pq_k = len(old_cb), len(old_cb[0])
@@ -346,7 +348,13 @@ def retrain_into(spark: SparkSession, old: IvfIndex, new_root: str,
         # no codebooks to derive geometry from — measure the standing
         # embeddings (a hardcoded default would mis-slice PQ subspaces
         # when the caller ADDS pq_m at retrain time on non-default dims)
-        dim = len(vecs.select("embedding").first()["embedding"])
+        first = None if vecs is None else vecs.select("embedding").first()
+        if first is None:
+            raise ValueError(
+                f"retrain_into: cannot infer the embedding dim of "
+                f"{old.table.root} — the index is empty and stores no PQ "
+                f"codebooks; ingest vectors before retraining")
+        dim = len(first["embedding"])
     new.train_on(spark, vecs, key, n_centroids=n_centroids, iters=iters,
                  pq_m=pq_m, pq_k=pq_k if pq_k is not None else 16, dim=dim)
     return new

@@ -675,9 +675,19 @@ def publish_refs_atomic(
              "base": p["base"], "sid": p["sid"]}
             for p in plan]})
         fds = dict(held)
-        for p in plan:
-            _fence(p["root"], fds[p["root"]])
-            _complete_swap(p["root"], p["ref"], p["name"])
+        swapping = False
+        try:
+            for p in plan:
+                _fence(p["root"], fds[p["root"]])
+                swapping = True
+                _complete_swap(p["root"], p["ref"], p["name"])
+        except BaseException:
+            # nothing published yet: the intent would only wedge every
+            # later publish on this coordinator — drop it. Once a swap has
+            # begun, it stays for recover_txn to roll forward.
+            if not swapping:
+                os.unlink(intent_path)
+            raise
         os.unlink(intent_path)
         return {p["root"]: p["snap"] for p in plan}
     finally:

@@ -20,6 +20,7 @@ from cdc.io.log import read_log
 from cdc.metrics import batch_lineage_metrics, write_batch_metrics
 from cdc.schema.normalize import normalize_content
 from cdc.schema.registry import SchemaRegistry, default_registry
+from cdc.skew import batch_profile, plan_lww
 from cdc.table.table import CdcTable
 
 
@@ -70,21 +71,32 @@ def apply_batch(
     order-insensitive across writers of disjoint batches, so retrying is
     always safe; 0 (default) preserves strict single-writer behaviour.
 
-    ``lww_via='auto'`` — the skew planner measures the batch's key profile
-    with one NARROW agg pass (key columns only; parquet column pruning keeps
-    the wide content column unread) and picks: 'semi' when the winner-key
-    set fits a broadcast (the wide content column then never shuffles —
-    the default-replay scaling win), 'salted' for hot keys beyond the task
-    budget, else 'maxby'."""
+    ``lww_via='auto'`` — the skew planner reads the batch profile (below)
+    and picks: 'semi' when the winner-key set fits a broadcast (the wide
+    content column then never shuffles — the default-replay scaling win),
+    'salted' for hot keys beyond the task budget, else 'maxby'.
+
+    Batch profile: ONE narrow ``groupBy(part)`` action over the raw batch
+    (key columns and ts; parquet column pruning keeps the wide content
+    column unread — ``cdc.skew.batch_profile``) feeds the resume guard,
+    the skew planner and the lineage metrics' late-row watermark. It runs
+    only when one of them consumes it."""
     if image not in ("full", "patch"):
         raise ValueError(f"unknown image kind {image!r}")
     if table.is_committed(batch_key):
         return table.current_snapshot()
-    # resume-path guard only: a fully-applied tail must not commit an empty
-    # snapshot. Fresh tables skip the probe job entirely.
-    if table.lsn_high() >= 0 and events.isEmpty():
-        return table.current_snapshot()
     t0 = time.monotonic()
+    # resume-path guard: a fully-applied tail must not commit an empty
+    # snapshot on a non-empty table (a fresh table needs no probe)
+    resuming = table.lsn_high() >= 0
+    plan = image == "full" and lww_via == "auto"
+    profile = None
+    if plan or metrics:
+        profile = batch_profile(events, table.part_of(), max_ts=metrics)
+        if resuming and profile["n_events"] == 0:
+            return table.current_snapshot()
+    elif resuming and events.isEmpty():
+        return table.current_snapshot()
     if image == "patch":
         # per-column last-non-null collapse — same single-aggregate,
         # map-side-combinable shape as the maxby LWW
@@ -92,9 +104,8 @@ def apply_batch(
         final = collapse_patches(events, keys=table.key_cols)
     else:
         salt = 32
-        if lww_via == "auto":
-            from cdc.skew import plan_lww
-            lww_via, salt = plan_lww(events)
+        if plan:
+            lww_via, salt = plan_lww(events, profile=profile)
         # No standalone dedup pass: verbatim at-least-once re-deliveries are
         # identical rows, so they collapse inside the LWW max_by / row_number
         # itself — one wide-content shuffle instead of two. (dedupe_exact (A2)
@@ -150,7 +161,8 @@ def apply_batch(
             # sketch so the metrics job never shuffles the batch (see
             # cdc.metrics) — the exact form stays available for audits.
             m = batch_lineage_metrics(events.withColumn("part", table.part_of()),
-                                      exact_dedup=False)
+                                      exact_dedup=False,
+                                      max_ts_us=profile["max_ts_us"])
             write_batch_metrics(m, table.root, batch_key, wall_ms=int((time.monotonic() - t0) * 1000))
     finally:
         final.unpersist()

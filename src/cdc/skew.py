@@ -173,6 +173,34 @@ def skew_stats(events: DataFrame, keys=("repo", "path")) -> dict:
             "avg_key_bytes": float(row["avg_key_bytes"] or 0.0)}
 
 
+def batch_profile(events: DataFrame, part, keys=("repo", "path"),
+                  max_ts: bool = True) -> dict:
+    """A commit's one narrow pre-pass over the raw batch: one
+    ``groupBy(part)`` over the key columns and ``ts``, collected to the
+    driver as P rows. It yields the row count (the resume guard's
+    emptiness probe), a distinct-key HLL and the key width (the LWW
+    planner), and, with ``max_ts``, the per-part max ``ts`` (the lineage
+    metrics' late-row watermark). A key never spans two partitions, so
+    the per-part HLL estimates add up. ``ts`` travels as epoch micros: no
+    naive-datetime round trip through ``collect``.
+
+    Returns ``skew_stats``' shape minus the exact hottest key (the
+    profile never groups by key), plus ``max_ts_us`` (part -> micros;
+    empty unless ``max_ts``)."""
+    aggs = [F.count(F.lit(1)).alias("n_raw"),
+            F.approx_count_distinct(F.struct(*keys)).alias("n_keys"),
+            F.sum(F.length(F.concat_ws("", *keys))).alias("key_bytes")]
+    if max_ts:
+        aggs.append(F.max(F.unix_micros("ts")).alias("max_ts_us"))
+    rows = events.groupBy(part.alias("part")).agg(*aggs).collect()
+    n_raw = sum(r["n_raw"] for r in rows)
+    key_bytes = sum(r["key_bytes"] or 0 for r in rows)
+    return {"n_keys": sum(r["n_keys"] for r in rows), "n_events": n_raw,
+            "avg_key_bytes": key_bytes / n_raw if n_raw else 0.0,
+            "max_ts_us": {r["part"]: r["max_ts_us"] for r in rows}
+            if max_ts else {}}
+
+
 def choose_salt(stats: dict, target_rows_per_task: int = 100_000,
                 max_salt: int = 256) -> int:
     """Planner: smallest power-of-two salt so the hottest key's per-salt
@@ -188,7 +216,8 @@ def choose_salt(stats: dict, target_rows_per_task: int = 100_000,
 def plan_lww(events: DataFrame, keys=("repo", "path"),
              target_rows_per_task: int = 100_000,
              broadcast_keys_max: int = 4_000_000,
-             broadcast_bytes_max: int = 200 * 1024 * 1024) -> tuple[str, int]:
+             broadcast_bytes_max: int = 200 * 1024 * 1024,
+             profile: dict | None = None) -> tuple[str, int]:
     """Decide the LWW strategy for a batch.
 
     ('semi', 1)   — when the winner-key set fits a broadcast (MEASURED
@@ -202,14 +231,21 @@ def plan_lww(events: DataFrame, keys=("repo", "path"),
                     to broadcast: two-stage salted window ranking.
     ('maxby', 1)  — the skew-robust fallback (map-side partial agg).
 
-    One narrow agg job over the key columns; parquet column pruning keeps
-    the wide payload unread."""
-    stats = skew_stats(events, keys)
+    ``profile`` — the commit's ``batch_profile`` over the same ``keys``
+    (cdc.pipeline.apply_batch): the broadcast test then reads its totals
+    and launches no job. Only the rare over-budget path pays the exact
+    key-level ``skew_stats`` pass, since the salt needs the true hottest
+    key. Without a profile, one ``skew_stats`` pass decides (parquet
+    column pruning keeps the wide payload unread either way)."""
+    stats = profile if profile is not None else skew_stats(events, keys)
     # byte-based eligibility: n_keys x (measured key width + ~40 B of row
     # overhead and order columns) must fit the broadcast budget — a row
     # cap alone would OOM on wide keys (long repo paths)
     est_bytes = stats["n_keys"] * (stats["avg_key_bytes"] + 40)
     if 0 < stats["n_keys"] <= broadcast_keys_max and est_bytes <= broadcast_bytes_max:
         return ("semi", 1)
+    if profile is not None and stats["n_keys"]:
+        # over the broadcast budget: the salt needs the exact hottest key
+        stats = skew_stats(events, keys)
     s = choose_salt(stats, target_rows_per_task)
     return ("maxby", 1) if s == 1 else ("salted", s)

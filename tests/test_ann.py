@@ -240,3 +240,22 @@ def test_train_crash_between_property_commits_heals_pq(spark, tmp_path):
     assert ix.pq_codebooks(spark) == cb
     got = ix.search(spark, _clustered_vecs(spark, 5), k=2, adc=True)
     assert got.count() > 0
+
+
+def test_retrain_empty_index_raises_value_error(spark, tmp_path):
+    """An index with no PQ codebooks and no live vectors gives retrain_into
+    nothing to measure the embedding dim from: a descriptive ValueError,
+    whether it was never committed or every vector was deleted."""
+    never = IvfIndex(str(tmp_path / "never"), n_partitions=4)
+    with pytest.raises(ValueError, match="embedding dim"):
+        retrain_into(spark, never, str(tmp_path / "never2"))
+    ix = IvfIndex(str(tmp_path / "ivf"), n_partitions=4)
+    ix.train_on(spark, _vecs(spark, range(6)), "base", n_centroids=2)
+    dels = _vecs(spark, range(6)).select(
+        "vec_id", F.lit("D").alias("op"),
+        F.lit(None).cast("array<float>").alias("embedding"),
+        F.col("embedding").alias("embedding_pre"))
+    ix.ingest_changes(spark, dels, "del-all")
+    assert ix.table.read(spark).count() == 0
+    with pytest.raises(ValueError, match="embedding dim"):
+        retrain_into(spark, ix, str(tmp_path / "ivf2"))

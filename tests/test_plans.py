@@ -129,9 +129,10 @@ def test_partition_pruned_table_read(spark, log_dir, tmp_path):
 
 def test_metrics_single_pass(spark, log_dir):
     """The lineage-metrics plan must read the full narrow columns ONCE:
-    one wide-narrow scan branch (3 FileScans, one per log version dir)
-    feeding a single (part,batch,lsn) exchange, plus a 2-column scan for
-    the per-part max — never two full passes or a whole-batch window."""
+    one narrow scan branch (3 FileScans, one per log version dir) feeding
+    a single (part,batch,lsn) exchange. The per-part max ts enters as a
+    literal map, so no other scan joins in — never two full passes or a
+    whole-batch window."""
     df = read_log(spark, log_dir, default_registry())
     m = batch_lineage_metrics(df.withColumn("part", F.pmod(F.xxhash64("repo"), F.lit(4))))
     p = plan_of(m)
@@ -139,6 +140,7 @@ def test_metrics_single_pass(spark, log_dir):
     op_scans = [ln for ln in phys.splitlines()
                 if "FileScan" in ln and "op:string" in ln]
     assert len(op_scans) == 3, phys[-3000:]
+    assert phys.count("FileScan") == 3, phys[-3000:]
     assert phys.count("batch_id") and "Window" not in phys
 
 

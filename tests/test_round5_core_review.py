@@ -125,6 +125,33 @@ def test_recover_txn_completes_clean_crash(spark, tmp_path):
     assert got == {"x", "y"}
 
 
+def test_failed_fence_leaves_no_intent(spark, tmp_path, monkeypatch):
+    """A publish that fails before its first pointer swap (here: the
+    stale-writer fence) publishes nothing and must not leave its intent
+    behind — otherwise every later publish on the coordinator aborts."""
+    ta, tb = _staged_pair(spark, tmp_path)
+    before = (store.current_snapshot_id(ta.root),
+              store.current_snapshot_id(tb.root))
+
+    def broken(root, fd):
+        raise CommitConflictError(f"commit lock at {root} was broken")
+
+    monkeypatch.setattr(store, "_fence", broken)
+    with pytest.raises(CommitConflictError, match="broken"):
+        store.publish_refs_atomic([(ta.root, "audit"), (tb.root, "audit")])
+    monkeypatch.undo()
+    intent = os.path.join(store.meta_dir(min(ta.root, tb.root)),
+                          store.TXN_INTENT)
+    assert not os.path.exists(intent)
+    assert (store.current_snapshot_id(ta.root),
+            store.current_snapshot_id(tb.root)) == before
+    assert store.recover_txn([ta.root, tb.root]) is False
+    # the same staged refs publish cleanly afterwards
+    store.publish_refs_atomic([(ta.root, "audit"), (tb.root, "audit")])
+    assert {r.path for r in ta.read(spark).collect()} == {"x", "y"}
+    assert {r.path for r in tb.read(spark).collect()} == {"x", "y"}
+
+
 # -- staged WAP snapshots are invisible to timestamp time travel ---------------
 
 def test_as_of_never_resolves_staged_snapshot(spark, tmp_path):
