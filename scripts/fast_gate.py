@@ -1,18 +1,23 @@
 """Sharded test gate: run the pytest suite as K concurrent pytest
 processes (one JVM each) and aggregate the results.
 
-Why: the suite is LATENCY-bound, not compute-bound — a quiet-box default
-run is ~18.5 min wall at ~20% CPU (hundreds of table commits, each a
-handful of small Spark jobs whose scheduling/py4j round-trips dominate).
-One pytest process cannot overlap that latency (no pytest-xdist in this
-environment); K processes on a 32-core box can. Shards are whole test
+Why: the suite is LATENCY-bound, not compute-bound (hundreds of table
+commits, each a handful of small Spark jobs whose scheduling/py4j
+round-trips dominate). One pytest process cannot overlap that latency (no
+pytest-xdist in this environment); K processes can. Shards are whole test
 FILES (session-scoped SparkSession per process; no cross-file state),
 heavy files seeded round-robin first so shards stay balanced.
+
+Sizing: every shard is one JVM, so the default shard count and each
+shard's driver heap (``CDC_DRIVER_MEM``, passed in the child env) derive
+from the host: at most one shard per 2 cores and per 6 GB of RAM, and
+the shards' heaps together take half of physical memory — the rest is
+JVM off-heap, Python workers and the tmpfs shuffle dir.
 
 Profiles:
   python scripts/fast_gate.py              # default profile (no `slow`)
   python scripts/fast_gate.py --full       # the pre-commit gate
-  python scripts/fast_gate.py --shards 2   # fewer JVMs on small boxes
+  python scripts/fast_gate.py --shards 2   # override the shard count
 """
 
 from __future__ import annotations
@@ -43,9 +48,19 @@ HEAVY = [
 ]
 
 
+def _mem_total_gb() -> float:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) / 2**20
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
+
 def main() -> int:
+    mem_gb, cpus = _mem_total_gb(), os.cpu_count() or 1
     ap = argparse.ArgumentParser()
-    ap.add_argument("--shards", type=int, default=4)
+    ap.add_argument("--shards", type=int,
+                    default=max(1, min(cpus // 2, int(mem_gb // 6), 4)))
     ap.add_argument("--full", action="store_true",
                     help="include slow-marked tests (the pre-commit gate)")
     args = ap.parse_args()
@@ -59,6 +74,8 @@ def main() -> int:
     for i, f in enumerate(ordered):
         shards[i % args.shards].append(f)
 
+    heap_gb = max(1, int(mem_gb / 2 / args.shards))
+    env = {**os.environ, "CDC_DRIVER_MEM": f"{heap_gb}g"}
     t0 = time.monotonic()
     procs = []
     for i, shard in enumerate(shards):
@@ -70,7 +87,7 @@ def main() -> int:
             cmd += ["-m", "slow or not slow"]
         procs.append((i, shard, subprocess.Popen(
             cmd, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
-            text=True)))
+            text=True, env=env)))
 
     ok = True
     for i, shard, p in procs:
@@ -84,7 +101,8 @@ def main() -> int:
             ok = False
             print(out[-4000:])
     print(f"fast_gate: {'PASS' if ok else 'FAIL'} in "
-          f"{time.monotonic() - t0:.1f}s with {args.shards} shards")
+          f"{time.monotonic() - t0:.1f}s with {args.shards} shards "
+          f"x {heap_gb}g heap")
     return 0 if ok else 1
 
 

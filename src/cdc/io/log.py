@@ -92,6 +92,8 @@ def truncate_log(log_dir: str, below_lsn: int,
     of growing forever."""
     import pyarrow.parquet as pq
 
+    from cdc.table.scan import footer_minmax
+
     horizon = below_lsn - reorder_horizon
     removed: list[str] = []
     for _version, vdir in _version_dirs(log_dir):
@@ -99,17 +101,7 @@ def truncate_log(log_dir: str, below_lsn: int,
             if not name.endswith(".parquet"):
                 continue
             full = os.path.join(vdir, name)
-            meta = pq.ParquetFile(full).metadata
-            names = [meta.schema.column(i).name
-                     for i in range(meta.num_columns)]
-            if "lsn" not in names:
-                continue
-            idx = names.index("lsn")
-            hi = None
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx).statistics
-                if st is not None and st.has_min_max:
-                    hi = st.max if hi is None else max(hi, st.max)
+            _, hi = footer_minmax(pq.ParquetFile(full).metadata, "lsn")
             if hi is not None and hi < horizon:
                 os.remove(full)
                 crc = os.path.join(vdir, f".{name}.crc")

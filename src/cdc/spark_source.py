@@ -24,8 +24,9 @@ Design (scale notes):
   EMITTED (``_deleted = true``): this is a change feed, deletes are data.
   Compaction/repartition commits add files but no new lsns — they
   correctly emit nothing.
-- Batch reads serve the CURRENT (or ``snapshot_id``) manifest one file
-  per partition. A snapshot carrying MOR delta layers still reads: under
+- Batch reads run the scan planner's tasks (``cdc.table.scan.plan_scan``)
+  over the CURRENT (or ``snapshot_id``) manifest: one InputPartition per
+  clean file. A snapshot carrying MOR delta layers still reads: under
   the ``key_hash`` layout every row of a key lives in ONE table partition
   (``part`` is a pure function of the key), so the LWW reconcile needs no
   shuffle — parts carrying deltas are emitted as one InputPartition per
@@ -109,52 +110,67 @@ def _arrow_schema(ddl: str):
     return pa.schema(fields)
 
 
-def _column_map(snap: dict, entry: dict) -> list | None:
-    """Per-file (file_col -> current_col) pairs resolved by FIELD ID
-    (column mapping: renames/drops are metadata-only — cdc/table/alter.py).
-    None = name identity (file predates ids)."""
-    ids = entry.get("ids")
-    cur = snap.get("column_ids")
-    if not ids or not cur:
-        return None
-    from cdc.meta.store import ddl_names
+def _aligned(path: str, colmap: list, fields: list):
+    """Read one data file and select, rename, pad and cast it to
+    ``fields`` (schema evolution: ``colmap`` — ``scan.column_map`` —
+    resolves renamed columns by field id and projects dropped ones away;
+    columns the file predates read as typed NULL)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    id_to_cur = {v: k for k, v in cur.items()}
-    return [(n, id_to_cur[i]) for n, i in zip(ddl_names(entry["columns"]), ids)
-            if i in id_to_cur]
+    t = pq.read_table(path, columns=[src for src, _ in colmap])
+    t = t.rename_columns([out for _, out in colmap])
+    return pa.table([t[f.name].cast(f.type) if f.name in t.column_names
+                     else pa.nulls(t.num_rows, type=f.type) for f in fields],
+                    schema=pa.schema(fields))
+
+
+def _layers(files: list, fields: list):
+    """One part's files aligned to ``fields`` and concatenated, each row
+    tagged with its file's ``_layer`` ordinal and ``_is_patch`` flag.
+    ``files`` = [(path, layer, colmap, is_patch), ...]."""
+    import pyarrow as pa
+
+    tabs = []
+    for path, layer, colmap, is_patch in files:
+        t = _aligned(path, colmap, fields)
+        n = t.num_rows
+        tabs.append(t.append_column("_layer", pa.array([layer] * n,
+                                                       type=pa.int64()))
+                    .append_column("_is_patch", pa.array([is_patch] * n)))
+    return pa.concat_tables(tabs)
+
+
+def _emit(t, target, include_deleted: bool, commit_id: int) -> Iterator:
+    """Drop tombstones unless ``include_deleted``, stamp the commit id and
+    yield ``t`` as Arrow batches of the target schema."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not include_deleted and "_deleted" in t.column_names:
+        t = t.filter(pc.invert(pc.coalesce(t["_deleted"], pa.scalar(False))))
+    cols = [pa.array([commit_id] * t.num_rows, type=pa.int64())
+            if f.name == "_commit_snapshot" else t[f.name] for f in target]
+    yield from pa.table(cols, schema=target).to_batches()
+
+
+def _data_fields(target) -> list:
+    return [f for f in target if f.name != "_commit_snapshot"]
 
 
 def _aligned_batches(path: str, target, lsn_floor: int | None,
                      include_deleted: bool, commit_id: int,
-                     colmap: list | None = None) -> Iterator:
-    """Read one immutable data file, filter, pad/cast to the TARGET arrow
-    schema (schema evolution: files written under older DDLs gain NULL
-    columns; ``colmap`` resolves renamed columns and projects dropped
-    ones away), stamp the commit id, yield Arrow record batches."""
+                     colmap: list) -> Iterator:
+    """Read one immutable data file, keep rows above ``lsn_floor``, and
+    yield it under the TARGET schema stamped with the commit id."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    t = pq.read_table(path)
-    if colmap is not None:
-        t = t.select([src for src, _ in colmap]).rename_columns(
-            [out for _, out in colmap])
+    t = _aligned(path, colmap, _data_fields(target))
     if lsn_floor is not None:
         t = t.filter(pc.greater(t["_lsn"], pa.scalar(lsn_floor,
                                                      type=pa.int64())))
-    if not include_deleted and "_deleted" in t.column_names:
-        t = t.filter(pc.invert(pc.coalesce(t["_deleted"],
-                                           pa.scalar(False))))
-    cols = []
-    for field in target:
-        if field.name == "_commit_snapshot":
-            cols.append(pa.array([commit_id] * t.num_rows,
-                                 type=pa.int64()))
-        elif field.name in t.column_names:
-            cols.append(t[field.name].cast(field.type))
-        else:
-            cols.append(pa.nulls(t.num_rows, type=field.type))
-    yield from pa.table(cols, schema=target).to_batches()
+    yield from _emit(t, target, include_deleted, commit_id)
 
 
 def _mor_batches(files: list, target, include_deleted: bool,
@@ -163,31 +179,12 @@ def _mor_batches(files: list, target, include_deleted: bool,
     file-locally: highest ``(_lsn, _layer)`` per key wins — byte-identical
     semantics to ``CdcTable.read``'s shuffle-based reconcile, valid here
     because the partition function is a pure function of the key (every
-    row of a key is in this task's file set). ``files`` =
-    [(path, layer, colmap), ...]."""
+    row of a key is in this task's file set)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    data_fields = [f for f in target if f.name != "_commit_snapshot"]
-    data_schema = pa.schema(data_fields)
-    tabs = []
-    for path, layer, colmap in files:
-        t = pq.read_table(path)
-        if colmap is not None:
-            t = t.select([src for src, _ in colmap]).rename_columns(
-                [out for _, out in colmap])
-        cols = []
-        for field in data_fields:
-            if field.name in t.column_names:
-                cols.append(t[field.name].cast(field.type))
-            else:
-                cols.append(pa.nulls(t.num_rows, type=field.type))
-        tab = pa.table(cols, schema=data_schema)
-        tabs.append(tab.append_column(
-            "_layer", pa.array([layer] * tab.num_rows, type=pa.int64())))
-    t = pa.concat_tables(tabs)
+    t = _layers(files, _data_fields(target))
     # LWW: sort keys asc + (_lsn, _layer) desc, keep each group's first row.
     # Equal-lsn ties across layers resolve in COMMIT ORDER via _layer,
     # matching CoW's batch-wins (>=) semantics.
@@ -201,12 +198,7 @@ def _mor_batches(files: list, target, include_deleted: bool,
             arr = t[k].to_numpy(zero_copy_only=False)
             first[1:] |= arr[1:] != arr[:-1]
         t = t.filter(pa.array(first))
-    if not include_deleted and "_deleted" in t.column_names:
-        t = t.filter(pc.invert(pc.coalesce(t["_deleted"],
-                                           pa.scalar(False))))
-    cols = [pa.array([commit_id] * t.num_rows, type=pa.int64())
-            if f.name == "_commit_snapshot" else t[f.name] for f in target]
-    yield from pa.table(cols, schema=target).to_batches()
+    yield from _emit(t, target, include_deleted, commit_id)
 
 
 #: fail-fast bound for the pure-Python patch-MOR fold below — one task's
@@ -222,8 +214,7 @@ def _patch_mor_batches(files: list, target, include_deleted: bool,
     base + patch layers per key IN COMMIT ORDER with ``merge_patches``'
     exact semantics (>= row-lsn guard, per-column coalesce, delete resets,
     patch-after-delete resurrects) — the arrow-side mirror of
-    ``cdc.patch.patch_reconcile``. ``files`` =
-    [(path, layer, colmap, is_patch), ...].
+    ``cdc.patch.patch_reconcile``.
 
     A plain per-key python fold over the part's rows: this source is the
     compatibility read surface (one part per task, patch layers are
@@ -236,31 +227,12 @@ def _patch_mor_batches(files: list, target, include_deleted: bool,
 
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     sys_cols = ("_lsn", "_updated_ts", "_content_sha256", "_deleted")
-    data_fields = [f for f in target if f.name != "_commit_snapshot"]
+    data_fields = _data_fields(target)
     value_cols = [f.name for f in data_fields
                   if f.name not in key_cols and f.name not in sys_cols]
-    data_schema = pa.schema(data_fields)
-    tabs = []
-    for path, layer, colmap, is_patch in sorted(files, key=lambda x: x[1]):
-        t = pq.read_table(path)
-        if colmap is not None:
-            t = t.select([src for src, _ in colmap]).rename_columns(
-                [out for _, out in colmap])
-        cols = []
-        for field in data_fields:
-            if field.name in t.column_names:
-                cols.append(t[field.name].cast(field.type))
-            else:
-                cols.append(pa.nulls(t.num_rows, type=field.type))
-        tab = pa.table(cols, schema=data_schema)
-        tab = tab.append_column("_layer", pa.array([layer] * tab.num_rows,
-                                                   type=pa.int64()))
-        tabs.append(tab.append_column(
-            "_is_patch", pa.array([is_patch] * tab.num_rows)))
-    t = pa.concat_tables(tabs)
+    t = _layers(sorted(files, key=lambda x: x[1]), data_fields)
     if t.num_rows > PATCH_MOR_MAX_ROWS:
         raise ValueError(
             f"patch-MOR partition holds {t.num_rows:,} uncompacted "
@@ -313,16 +285,8 @@ def _patch_mor_batches(files: list, target, include_deleted: bool,
                    "vals": {c: x[c] for c in value_cols}}
     flush(cur_key, acc)
 
-    if not include_deleted:
-        out = [r for r in out if not r["_deleted"]]
-    arrays = []
-    for field in target:
-        if field.name == "_commit_snapshot":
-            arrays.append(pa.array([commit_id] * len(out), type=pa.int64()))
-        else:
-            arrays.append(pa.array([r[field.name] for r in out],
-                                   type=field.type))
-    yield from pa.table(arrays, schema=target).to_batches()
+    yield from _emit(pa.Table.from_pylist(out, schema=pa.schema(data_fields)),
+                     target, include_deleted, commit_id)
 
 
 class CdcTableDataSource(DataSource):
@@ -375,40 +339,14 @@ class CdcBatchReader(DataSourceReader):
             f"{self._snap['schema_ddl']}, {_SYS_SUFFIX}")
         self._bounds: dict[str, list] = {}
 
-    def _keep(self, entry: dict) -> bool:
-        from cdc.table.table import _prune_bound
-
-        for col, (lo, hi) in self._bounds.items():
-            if col == "_lsn":
-                st = (entry["lsn_min"], entry["lsn_max"])
-                if st[0] < 0:
-                    continue
-            else:
-                st = (entry.get("stats") or {}).get(col)
-                if st is None:
-                    continue
-            lo, hi = _prune_bound(lo), _prune_bound(hi)
-            try:
-                if ((hi is not None and st[0] > hi)
-                        or (lo is not None and st[1] < lo)):
-                    return False
-            except TypeError:   # incomparable bound type: keep (safe)
-                continue
-        return True
-
     def partitions(self):
         import os
-        import re
 
-        sid = self._snap["snapshot_id"]
-        files = self._snap["files"]
-        delta_parts = {int(f["part"]) for f in files
-                       if f.get("kind") == "delta"}
-        # patch- and row-image delta kinds never mix in one uncompacted
-        # snapshot (commit_delta refuses), so this is a snapshot-wide flag
-        has_patch = any(f.get("kind") == "delta"
-                        and f.get("image", "row") == "patch" for f in files)
-        if delta_parts:
+        from cdc.table.scan import column_map, is_patch, layer_of, plan_scan
+
+        tasks = plan_scan(self._snap, prune=self._bounds)
+        key_cols = None
+        if any(t.reconcile != "none" for t in tasks):
             # MOR reconcile is file-local ONLY when the partition function
             # is a pure function of the key (all this engine's layouts hash
             # key columns) — which needs the recorded key columns
@@ -420,46 +358,27 @@ class CdcBatchReader(DataSourceReader):
                     "source cannot reconcile without key columns; compact "
                     "first or read via CdcTable.read")
             key_cols = tuple(cfg["key_cols"])
-        out = []
-        by_part: dict[int, list] = {}
-        for f in files:
-            part = int(f["part"])
-            if part in delta_parts:
-                # never prune a delta-carrying part: a skipped delta winner
-                # would resurrect a stale base row (same rule as
-                # CdcTable.read(prune=))
-                m = re.search(r"data/snap-(\d+)[^/]*/", f["path"])
-                layer = int(m.group(1)) if m else 0
-                entry = (os.path.join(self._root, f["path"]), layer,
-                         _column_map(self._snap, f))
-                if has_patch:
-                    entry += (f.get("kind") == "delta",)  # is_patch flag
-                by_part.setdefault(part, []).append(entry)
-            elif self._keep(f):
-                out.append(InputPartition(
-                    ("file", os.path.join(self._root, f["path"]), sid,
-                     _column_map(self._snap, f))))
-        kind = "mor_patch" if has_patch else "mor"
-        out.extend(InputPartition((kind, by_part[p], sid, key_cols))
-                   for p in sorted(by_part))
-        return out
+        ids = self._snap["column_ids"]
+        return [InputPartition((
+                    t.reconcile,
+                    [(os.path.join(self._root, f["path"]), layer_of(f),
+                      column_map(ids, f), is_patch(f)) for f in t.files],
+                    self._snap["snapshot_id"], key_cols))
+                for t in tasks]
 
     def read(self, partition):
-        kind = partition.value[0]
-        if kind == "mor":
-            _, files, sid, key_cols = partition.value
+        reconcile, files, sid, key_cols = partition.value
+        if reconcile == "row":
             yield from _mor_batches(files, self._target,
                                     self._include_deleted, sid, key_cols)
-        elif kind == "mor_patch":
-            _, files, sid, key_cols = partition.value
+        elif reconcile == "patch":
             yield from _patch_mor_batches(files, self._target,
                                           self._include_deleted, sid,
                                           key_cols)
         else:
-            _, path, sid, colmap = partition.value
+            [(path, _, colmap, _)] = files
             yield from _aligned_batches(path, self._target, None,
-                                        self._include_deleted, sid,
-                                        colmap=colmap)
+                                        self._include_deleted, sid, colmap)
 
 
 class CdcPushdownBatchReader(CdcBatchReader):
@@ -528,7 +447,7 @@ class CdcStreamReader(DataSourceStreamReader):
             f"{snap['schema_ddl']}, {_SYS_SUFFIX}")
         # feed rows are emitted under the stream's init-time schema; files
         # written before a rename resolve to it by field id
-        self._cur_ids = snap.get("column_ids")
+        self._cur_ids = snap["column_ids"]
 
     def _observe(self, sid: int) -> None:
         if self._seen is None or sid > self._seen:
@@ -615,6 +534,7 @@ class CdcStreamReader(DataSourceStreamReader):
         import os
 
         from cdc.meta import store
+        from cdc.table.scan import column_map
 
         lo, hi = int(start["snapshot_id"]), int(end["snapshot_id"])
         self._observe(hi)
@@ -647,11 +567,10 @@ class CdcStreamReader(DataSourceStreamReader):
                 added = [f["path"] for f in snap["files"]
                          if f.get("origin") == "added"]
             by_path = {f["path"]: f for f in snap["files"]}
-            fake = {"column_ids": self._cur_ids}
             out.extend(
                 InputPartition((os.path.join(self._root, p), floor,
                                 snap["snapshot_id"],
-                                _column_map(fake, by_path[p])))
+                                column_map(self._cur_ids, by_path[p])))
                 for p in added)
         return out
 
@@ -659,7 +578,7 @@ class CdcStreamReader(DataSourceStreamReader):
         path, floor, sid, colmap = partition.value
         # include_deleted=True: tombstones ARE the delete events
         yield from _aligned_batches(path, self._target, floor, True, sid,
-                                    colmap=colmap)
+                                    colmap)
 
     def commit(self, end: dict) -> None:
         self._observe(int(end["snapshot_id"]))

@@ -1,29 +1,24 @@
-"""T6 (stretch) — online per-key LWW via ``transformWithStateInPandas``.
+"""T6 (stretch) — online per-key LWW via the ``applyInPandasWithState``
+GroupState API.
 
 The default engine path applies LWW per micro-batch inside ``foreachBatch``
 (cdc.stream.pipeline) and lets the table MERGE reconcile across batches.
 This module is the *online* alternative: a keyed stateful operator that
-keeps the current winner per (repo, path) in the state store (RocksDB
-provider) and emits a changelog of winner updates — the shape a downstream
-sink consumes when the table itself lives outside Spark.
+keeps the current winner per (repo, path) in the state store and emits a
+changelog of winner updates — the shape a downstream sink consumes when
+the table itself lives outside Spark.
 
 Arrow-batched per key group; state is one row per key (winner), so state
-size is O(live keys), independent of event volume.
-
-Runtime dependency note: the Python<->JVM state protocol of
-``transformWithStateInPandas`` is protobuf-serialized, so the
-``protobuf`` package (pyspark's ``connect`` extra) must be installed on
-driver and workers; this container lacks it, so tests/test_stateful.py
-skips and the foreachBatch path (cdc.stream.pipeline) remains the default.
+size is O(live keys), independent of event volume. GroupState serializes
+over Arrow/JSON, so it needs no protobuf state protocol (unlike
+``transformWithStateInPandas``).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-from pyspark.sql.types import (LongType, StringType, StructField, StructType,
-                               TimestampType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 WINNER_SCHEMA = StructType([
     StructField("lsn", LongType()),
@@ -45,67 +40,11 @@ OUTPUT_SCHEMA = StructType([
 ])
 
 
-class OnlineLwwProcessor(StatefulProcessor):
-    """Keeps the (lsn, batch_id)-max event per key; emits one changelog row
-    per key per micro-batch in which its winner advanced."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("winner", WINNER_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        best = None
-        if self.state.exists():
-            cur = self.state.get()
-            best = tuple(cur)
-        for pdf in rows:
-            pdf = pdf.sort_values(["lsn", "batch_id"])
-            last = pdf.iloc[-1]
-            cand = (int(last["lsn"]), int(last["batch_id"]), str(last["op"]),
-                    str(last["commit"]), str(last["lang"]),
-                    None if last["content"] is None or
-                    (isinstance(last["content"], float) and pd.isna(last["content"]))
-                    else str(last["content"]))
-            if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                best = cand
-        assert best is not None
-        self.state.update(best)
-        yield pd.DataFrame({
-            "repo": [key[0]], "path": [key[1]],
-            "lsn": [best[0]], "op": [best[2]], "commit": [best[3]],
-            "lang": [best[4]], "content": [best[5]],
-        })
-
-    def close(self) -> None:
-        pass
-
-
-def online_lww_changelog(events: DataFrame) -> DataFrame:
-    """Attach the stateful online-LWW operator to a streaming event frame.
-    Emits (key, winner) rows whenever a key's winner changes.
-
-    Requires the RocksDB state store provider::
-
-        spark.sql.streaming.stateStore.providerClass=
-          org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    """
-    return (events
-            .select("repo", "path", "lsn", "batch_id", "op", "commit", "lang", "content")
-            .groupBy("repo", "path")
-            .transformWithStateInPandas(
-                OnlineLwwProcessor(),
-                outputStructType=OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None"))
-
-
 def online_lww_changelog_gs(events: DataFrame) -> DataFrame:
-    """T6 via the ``applyInPandasWithState`` GroupState API — identical
-    online-LWW semantics to ``online_lww_changelog`` WITHOUT the protobuf
-    state protocol (GroupState serializes over Arrow/JSON), so it runs in
-    protobuf-less environments like this container. Emits one changelog row
-    per key per micro-batch in which the key appeared, carrying the current
-    winner (state = one row per live key; O(live keys), independent of
-    event volume)."""
+    """Attach the online-LWW operator to a streaming event frame. Emits one
+    changelog row per key per micro-batch in which the key appeared,
+    carrying the current winner: the (lsn, batch_id)-max event (state =
+    one row per live key; O(live keys), independent of event volume)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def lww(key, pdfs, state: GroupState):

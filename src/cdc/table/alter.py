@@ -101,8 +101,7 @@ def rename_column(table: CdcTable, old: str, new: str) -> dict:
         raise ValueError(f"column {new!r} already exists")
     if new.startswith("_") or not new.isidentifier():
         raise ValueError(f"bad column name {new!r}")
-    ids = dict(parent["column_ids"]) if parent.get("column_ids") else {
-        n: i + 1 for i, n in enumerate(names)}
+    ids = dict(parent["column_ids"])
     ids[new] = ids.pop(old)
     out = [(new if n == old else n, t) for n, t in fields]
     return _commit_alter(table, parent, out, ids, f"rename-{old}-{new}")
@@ -115,8 +114,7 @@ def drop_column(table: CdcTable, col: str) -> dict:
     names = [n for n, _ in fields]
     if col not in names:
         raise ValueError(f"no column {col!r} (have {names})")
-    ids = dict(parent["column_ids"]) if parent.get("column_ids") else {
-        n: i + 1 for i, n in enumerate(names)}
+    ids = dict(parent["column_ids"])
     ids.pop(col, None)
     out = [(n, t) for n, t in fields if n != col]
     return _commit_alter(table, parent, out, ids, f"drop-{col}")
@@ -132,8 +130,7 @@ def add_column(table: CdcTable, col: str, col_type: str) -> dict:
         raise ValueError(f"column {col!r} already exists")
     if col.startswith("_") or not col.isidentifier():
         raise ValueError(f"bad column name {col!r}")
-    ids = dict(parent["column_ids"]) if parent.get("column_ids") else {
-        n: i + 1 for i, n in enumerate(names)}
+    ids = dict(parent["column_ids"])
     ids[col] = max(ids.values(), default=0) + 1
     # system columns stay last-ish by convention, but order is cosmetic —
     # resolution is by name/id everywhere
@@ -155,8 +152,7 @@ def widen_column(table: CdcTable, col: str, new_type: str) -> dict:
           or (cur.startswith("decimal") and new_type.startswith("decimal")))
     if not ok:
         raise ValueError(f"cannot widen {col!r}: {cur} -> {new_type}")
-    ids = dict(parent["column_ids"]) if parent.get("column_ids") else {
-        n: i + 1 for i, (n, _) in enumerate(fields)}
+    ids = dict(parent["column_ids"])
     out = [(n, new_type if n == col else t) for n, t in fields]
     return _commit_alter(table, parent, out, ids, f"widen-{col}")
 

@@ -17,13 +17,25 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from cdc.meta import store
+from cdc.table.scan import footer_minmax
 from cdc.table.table import PART_COL, CdcTable
+
+
+def compaction_candidates(snap: dict,
+                          max_files_per_partition: int) -> list[int]:
+    """Partitions worth compacting, from the manifest alone: more than
+    ``max_files_per_partition`` files, or carrying MOR delta layers."""
+    n_files = Counter(int(f["part"]) for f in snap["files"])
+    delta = {int(f["part"]) for f in snap["files"] if f.get("kind") == "delta"}
+    return sorted(p for p, n in n_files.items()
+                  if n > max_files_per_partition or p in delta)
 
 
 def compact(spark: SparkSession, table: CdcTable,
@@ -71,15 +83,7 @@ def compact(spark: SparkSession, table: CdcTable,
             rec = _json.loads(so)
             cluster_by, zorder = rec["cluster_by"], rec.get("zorder", False)
     if max_files_per_partition is not None:
-        by_part: dict[int, int] = {}
-        delta_parts: set[int] = set()
-        for f in parent["files"]:
-            p = int(f["part"])
-            by_part[p] = by_part.get(p, 0) + 1
-            if f.get("kind") == "delta":
-                delta_parts.add(p)
-        parts = sorted(p for p, n in by_part.items()
-                       if n > max_files_per_partition or p in delta_parts)
+        parts = compaction_candidates(parent, max_files_per_partition)
         if not parts:
             return parent
     df = table.read(spark, parts=parts, include_deleted=True)
@@ -277,8 +281,9 @@ def plan_maintenance(table: CdcTable,
     caller (a cron job, a post-commit hook) can execute directly:
 
     - ``compact_parts`` — partitions fragmented past
-      ``max_files_per_partition`` or carrying MOR delta layers (the
-      exact selection ``compact(max_files_per_partition=…)`` would make);
+      ``max_files_per_partition`` or carrying MOR delta layers
+      (``compaction_candidates`` — the selection
+      ``compact(max_files_per_partition=…)`` makes);
     - ``vacuum_tombstones_below_lsn`` — passthrough of the caller's
       reordering horizon, attached so the compaction it recommends also
       vacuums (None = keep tombstones);
@@ -293,15 +298,7 @@ def plan_maintenance(table: CdcTable,
     if snap is None:
         return {"compact_parts": [], "expire": False, "orphan_dirs": [],
                 "vacuum_tombstones_below_lsn": tombstone_horizon}
-    by_part: dict[int, int] = {}
-    delta_parts: set[int] = set()
-    for f in snap["files"]:
-        p = int(f["part"])
-        by_part[p] = by_part.get(p, 0) + 1
-        if f.get("kind") == "delta":
-            delta_parts.add(p)
-    compact_parts = sorted(p for p, n in by_part.items()
-                           if n > max_files_per_partition or p in delta_parts)
+    compact_parts = compaction_candidates(snap, max_files_per_partition)
 
     live_dirs = {f["path"].split("/", 2)[1]
                  for s in table.snapshots() for f in s["files"]}
@@ -362,19 +359,11 @@ def verify_table(spark: SparkSession, table: CdcTable,
         if meta.num_rows != int(f["rows"]):
             errs.append(f"{f['path']}: footer rows {meta.num_rows} != "
                         f"manifest {f['rows']}")
-        names = [meta.schema.column(i).name for i in range(meta.num_columns)]
-        if "_lsn" in names and int(f["rows"]) > 0:
-            idx = names.index("_lsn")
-            lo = hi = None
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx).statistics
-                if st is not None and st.has_min_max:
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-            if lo is not None and (int(lo) != int(f["lsn_min"])
-                                   or int(hi) != int(f["lsn_max"])):
-                errs.append(f"{f['path']}: footer lsn [{lo},{hi}] != "
-                            f"manifest [{f['lsn_min']},{f['lsn_max']}]")
+        lo, hi = footer_minmax(meta, "_lsn")
+        if int(f["rows"]) > 0 and lo is not None and (
+                int(lo) != int(f["lsn_min"]) or int(hi) != int(f["lsn_max"])):
+            errs.append(f"{f['path']}: footer lsn [{lo},{hi}] != "
+                        f"manifest [{f['lsn_min']},{f['lsn_max']}]")
         part_dir = f["path"].rsplit("/", 2)[-2]
         if part_dir != f"part={int(f['part'])}":
             errs.append(f"{f['path']}: stored under {part_dir} but manifest "

@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 import uuid
 from collections.abc import Mapping, Sequence
-from datetime import date, datetime, timezone
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,34 +24,9 @@ from pyspark.sql import types as T
 
 from cdc import merge as M
 from cdc.meta import store
+from cdc.table import scan
 
 PART_COL = "part"
-
-
-def _stat_norm(v):
-    """Canonicalize a min/max stat for the JSON manifest: timestamps to
-    naive-UTC ISO strings ('T' separator — what comparisons key on),
-    numbers and strings as-is."""
-    if isinstance(v, datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(timezone.utc).replace(tzinfo=None)
-        return v.isoformat()
-    if isinstance(v, date):
-        return v.isoformat()
-    return v
-
-
-def _prune_bound(v):
-    """Canonicalize a user prune bound the same way stats were stored:
-    datetimes (or ISO strings that parse as one) to naive-UTC isoformat."""
-    if isinstance(v, (datetime, date)):
-        return _stat_norm(v)
-    if isinstance(v, str):
-        try:
-            return _stat_norm(datetime.fromisoformat(v))
-        except ValueError:
-            return v
-    return v
 
 
 def part_expr(repo_col: str, n_partitions: int):
@@ -402,22 +377,18 @@ class CdcTable:
                 if snapshot_id is not None else self.current_snapshot())
         if snap is None:
             raise ValueError("empty table has nothing to export")
-        cur = snap.get("column_ids") or {}
-        id_to_cur = {v: k for k, v in cur.items()}
-        for f in snap["files"]:
-            if f.get("kind") == "delta":
+        for task in scan.plan_scan(snap):
+            if task.reconcile != "none":
                 raise ValueError(
                     "snapshot has MOR delta layers — external engines "
                     "cannot reconcile them; compact first")
-            ids = f.get("ids")
-            if ids and cur:
-                names = store.ddl_names(f["columns"])
-                for n, i in zip(names, ids):
-                    if id_to_cur.get(i, n) != n:
-                        raise ValueError(
-                            f"file {f['path']} predates a column rename "
-                            f"({n!r} -> {id_to_cur[i]!r}); external engines "
-                            f"resolve by name — compact first")
+            f = task.files[0]
+            for n, cur in scan.column_map(snap["column_ids"], f):
+                if n != cur:
+                    raise ValueError(
+                        f"file {f['path']} predates a column rename "
+                        f"({n!r} -> {cur!r}); external engines "
+                        f"resolve by name — compact first")
         return [os.path.abspath(os.path.join(self.root, f["path"]))
                 for f in snap["files"]]
 
@@ -518,12 +489,11 @@ class CdcTable:
 
         ``prune`` — manifest-level data skipping: ``{col: (lo, hi)}``
         drops files whose recorded min/max range (``stats_cols`` at write
-        time) can't intersect [lo, hi] (None = open bound). SUPERSET
-        semantics: the caller still applies the exact predicate — prune
-        only guarantees no matching row is lost. Files without stats for
-        a column are kept, and partitions carrying delta layers never
-        prune (a skipped delta winner would resurrect a stale base row);
-        compaction folds deltas, restoring skipping."""
+        time, or the manifest's ``_lsn`` bounds) can't intersect [lo, hi]
+        (None = open bound). SUPERSET semantics: the caller still applies
+        the exact predicate — prune only guarantees no matching row is
+        lost. The planner (``scan.plan_scan``) keeps files without stats
+        for a column and never prunes a delta-carrying partition."""
         if sum(x is not None for x in (snapshot_id, tag, as_of)) > 1:
             raise ValueError("pass only one of snapshot_id / tag / as_of")
         if as_of is not None:
@@ -534,79 +504,33 @@ class CdcTable:
                 else self.current_snapshot())
         if snap is None:
             return None
-        files = snap["files"]
-        if parts is not None:
-            wanted = set(int(p) for p in parts)
-            files = [f for f in files if int(f["part"]) in wanted]
-        if prune:
-            bounds = {c: (_prune_bound(lo), _prune_bound(hi))
-                      for c, (lo, hi) in prune.items()}
-            delta_parts = {int(f["part"]) for f in files
-                           if f.get("kind") == "delta"}
-
-            def keep(f) -> bool:
-                if int(f["part"]) in delta_parts:
-                    return True
-                stats = f.get("stats") or {}
-                for c, (lo, hi) in bounds.items():
-                    st = stats.get(c)
-                    if st is None:
-                        continue
-                    try:
-                        if ((hi is not None and st[0] > hi)
-                                or (lo is not None and st[1] < lo)):
-                            return False
-                    except TypeError:  # incomparable bound type: keep
-                        continue
-                return True
-
-            files = [f for f in files if keep(f)]
+        tasks = scan.plan_scan(snap, parts=parts, prune=prune)
         target = T.StructType.fromDDL(snap["schema_ddl"])
-        has_delta = any(f.get("kind") == "delta" for f in files)
-        # patch-image deltas (apply_batch(image='patch', mode='mor'))
-        # reconcile by per-column coalesce in commit order, not row LWW;
-        # commit_delta refuses to mix the two kinds in one snapshot
-        has_patch = any(f.get("kind") == "delta"
-                        and f.get("image", "row") == "patch" for f in files)
-        # column mapping: files are read under their own recorded DDL,
-        # then their columns resolve to CURRENT names BY FIELD ID —
-        # renames/drops are metadata-only (alter.py). Files predating
-        # ids (or columns without one) fall back to name identity.
-        id_to_cur = {v: k for k, v in
-                     (snap.get("column_ids") or {}).items()}
+        has_patch = any(t.reconcile == "patch" for t in tasks)
 
         def assemble(fset: list, with_layer: bool,
                      with_patch: bool) -> DataFrame:
-            by_ddl: dict[tuple, list[str]] = {}
+            # one relation per (DDL, field ids, image) group; files are
+            # read under their own recorded DDL, then resolve to CURRENT
+            # names by field id (renames/drops are metadata-only)
+            by_ddl: dict[tuple, tuple] = {}
             for f in fset:
-                key = (f["columns"], tuple(f.get("ids") or ()),
-                       f.get("kind") == "delta"
-                       and f.get("image", "row") == "patch")
-                by_ddl.setdefault(key, []).append(
+                key = (f["columns"], tuple(f["ids"]), scan.is_patch(f))
+                by_ddl.setdefault(key, (f, []))[1].append(
                     os.path.join(self.root, f["path"]))
             dfs = []
-            for (ddl, ids, is_patch), paths in sorted(by_ddl.items()):
+            for (ddl, _, is_patch), (f, paths) in sorted(by_ddl.items()):
                 d = spark.read.schema(ddl).parquet(*paths)
-                if ids:
-                    sel = [F.col(n).alias(id_to_cur[i])
-                           for n, i in zip(store.ddl_names(ddl), ids)
-                           if i in id_to_cur]   # dropped ids project away
-                    d = d.select(*sel)
+                d = d.select(*[F.col(n).alias(cur) for n, cur in
+                               scan.column_map(snap["column_ids"], f)])
                 if with_layer:
-                    # layer ordinal = snapshot id baked into the staging dir
-                    # name; computed at scan time (input_file_name is only
-                    # valid inside the scan stage, before any shuffle).
-                    # anchored to the data dir: a table ROOT containing
-                    # 'snap-<digits>' must not shadow the layer id
-                    # greedy .* anchors to the LAST data/snap segment: a
-                    # table ROOT path containing 'data/snap-N' must not
-                    # shadow the real layer id (commit order drives
-                    # equal-lsn tombstone-vs-update resolution)
+                    # computed at scan time: input_file_name is only valid
+                    # inside the scan stage, before any shuffle
                     d = d.withColumn("_layer", F.regexp_extract(
-                        F.input_file_name(),
-                        r".*/data/snap-(\d+)[^/]*/", 1).cast("long"))
+                        F.input_file_name(), scan.LAYER_PATTERN,
+                        1).cast("long"))
                     if with_patch:
-                        d = d.withColumn("_is_patch", F.lit(bool(is_patch)))
+                        d = d.withColumn("_is_patch", F.lit(is_patch))
                 dfs.append(d)
             out = dfs[0]
             for d in dfs[1:]:
@@ -622,21 +546,18 @@ class CdcTable:
                     cols.append(F.col("_is_patch"))
             return out.select(*cols)
 
-        if not files:
+        dirty = [f for t in tasks if t.reconcile != "none" for f in t.files]
+        clean = [f for t in tasks if t.reconcile == "none" for f in t.files]
+        if not tasks:
             df = spark.createDataFrame([], target)
-        elif has_delta:
+        elif dirty:
             # merge-on-read reconcile, scoped to the DELTA-CARRYING
-            # partitions only: the partition function is a pure function of
-            # the key, so a key in a clean partition cannot have delta rows
-            # elsewhere — clean partitions stream through scan-only while
-            # only the churned partitions pay the reconcile shuffle. At
-            # 100 TB a table with one fresh delta partition reconciles
-            # O(that partition), not O(table). Plan-pinned by
+            # partitions only (scan.ScanTask): clean partitions stream
+            # through scan-only while only the churned partitions pay the
+            # reconcile shuffle. At 100 TB a table with one fresh delta
+            # partition reconciles O(that partition), not O(table).
+            # Plan-pinned by
             # tests/test_plans.py::test_mor_reconcile_scoped_to_delta_parts.
-            delta_parts = {int(f["part"]) for f in files
-                           if f.get("kind") == "delta"}
-            dirty = [f for f in files if int(f["part"]) in delta_parts]
-            clean = [f for f in files if int(f["part"]) not in delta_parts]
             df = assemble(dirty, with_layer=True, with_patch=has_patch)
             if has_patch:
                 # patch-image reconcile: per key, fold base + patch layers
@@ -661,7 +582,7 @@ class CdcTable:
             # reconcile outputs keys-first; restore the snapshot order
             df = df.select(*[f.name for f in target.fields])
         else:
-            df = assemble(files, with_layer=False, with_patch=False)
+            df = assemble(clean, with_layer=False, with_patch=False)
         if not include_deleted and "_deleted" in df.columns:
             df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
         return df.withColumn(PART_COL, self.part_of())
@@ -852,26 +773,7 @@ class CdcTable:
         def footer_entry(t):
             p, dname, name, full = t
             meta = pq.ParquetFile(full).metadata
-            # parquet statistics are per LEAF column: locate columns by
-            # leaf path, not field position — a multi-leaf column (struct,
-            # map) ahead of _lsn would shift positional indices and read
-            # the WRONG column's min/max (corrupting lsn pruning bounds)
-            leaves = list(meta.schema.names)
-
-            def minmax(col_name):
-                try:
-                    idx = leaves.index(col_name)
-                except ValueError:
-                    return None, None   # nested/absent: no leaf stats
-                lo, hi = None, None
-                for rg in range(meta.num_row_groups):
-                    st = meta.row_group(rg).column(idx).statistics
-                    if st is not None and st.has_min_max:
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                return lo, hi
-
-            lo, hi = minmax("_lsn")
+            lo, hi = scan.footer_minmax(meta, "_lsn")
             entry = {
                 "path": f"{rel_dir}/{dname}/{name}",
                 "part": p,
@@ -882,71 +784,17 @@ class CdcTable:
                 "origin": "added",
                 "kind": kind,
             }
-            if stat_names:
-                stats = {}
-                for c in stat_names:
-                    clo, chi = minmax(c)
-                    if clo is not None:
-                        stats[c] = [_stat_norm(clo), _stat_norm(chi)]
-                if stats:
-                    entry["stats"] = stats
+            stats = {}
+            for c in stat_names:
+                clo, chi = scan.footer_minmax(meta, c)
+                if clo is not None:
+                    stats[c] = [scan.stat_norm(clo), scan.stat_norm(chi)]
+            if stats:
+                entry["stats"] = stats
             return entry
 
-        if len(targets) <= 2:
-            entries = [footer_entry(t) for t in targets]
-        elif len(targets) <= 256:
-            with ThreadPoolExecutor(max_workers=min(16, len(targets))) as ex:
-                entries = list(ex.map(footer_entry, targets))
-        else:
-            # EXECUTOR-side stats for very large commits: one narrow Spark
-            # agg (lsn column only, grouped by source file) replaces
-            # thousands of driver-side footer round-trips — the stats step
-            # scales with the cluster, not the driver.
-            entries = self._stats_via_spark(df.sparkSession, out_dir, rel_dir,
-                                            ddl, kind)
-        return entries, ddl
-
-    def _stats_via_spark(self, spark: SparkSession, out_dir: str,
-                         rel_dir: str, ddl: str, kind: str) -> list[dict]:
-        scan = spark.read.parquet(out_dir)
-        extra = [c for c in self.stats_cols if c in scan.columns]
-        aggs = [F.count(F.lit(1)).alias("rows"),
-                F.min("_lsn").alias("lo"), F.max("_lsn").alias("hi")]
-        for c in extra:
-            aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-        stats = (scan
-                 .select(F.input_file_name().alias("f"), "_lsn", PART_COL,
-                         *extra)
-                 .groupBy("f", PART_COL)
-                 .agg(*aggs)
-                 .collect())
-        from urllib.parse import unquote, urlparse
-
-        entries = []
-        for r in sorted(stats, key=lambda r: r["f"]):
-            # input_file_name() returns a percent-encoded file URI — decode
-            # before deriving the manifest-relative path, or roots with
-            # spaces/non-ASCII produce unreadable entries
-            fpath = unquote(urlparse(r["f"]).path)
-            idx = fpath.index(out_dir)
-            rel = fpath[idx + len(out_dir):].lstrip("/")
-            entry = {
-                "path": f"{rel_dir}/{rel}",
-                "part": int(r[PART_COL]),
-                "rows": int(r["rows"]),
-                "lsn_min": int(r["lo"]) if r["lo"] is not None else -1,
-                "lsn_max": int(r["hi"]) if r["hi"] is not None else -1,
-                "columns": ddl,
-                "origin": "added",
-                "kind": kind,
-            }
-            col_stats = {c: [_stat_norm(r[f"_lo_{c}"]),
-                             _stat_norm(r[f"_hi_{c}"])]
-                         for c in extra if r[f"_lo_{c}"] is not None}
-            if col_stats:
-                entry["stats"] = col_stats
-            entries.append(entry)
-        return entries
+        with ThreadPoolExecutor(max_workers=min(16, max(1, len(targets)))) as ex:
+            return list(ex.map(footer_entry, targets)), ddl
 
     def commit_delta(self, spark: SparkSession, batch_final: DataFrame,
                      batch_key: str, ref: str = store.CURRENT,

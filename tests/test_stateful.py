@@ -1,7 +1,5 @@
 """T6 — online stateful LWW: the final emitted winner per key must equal
-the batch LWW. Two runtimes: the GroupState form
-(``online_lww_changelog_gs``, runs here) and the Spark-4
-transformWithStateInPandas form (needs protobuf -> skipped here)."""
+the batch LWW (GroupState runtime, ``online_lww_changelog_gs``)."""
 
 from __future__ import annotations
 
@@ -9,7 +7,7 @@ import pytest
 
 from cdc.dedup import last_writer_wins
 from cdc.schema.registry import default_registry
-from cdc.stream.stateful import online_lww_changelog, online_lww_changelog_gs
+from cdc.stream.stateful import online_lww_changelog_gs
 from cdc.testing.gen import gen_change_events, write_change_log
 
 
@@ -64,11 +62,3 @@ def test_online_lww_groupstate_matches_batch_lww(rocksdb_spark, tmp_path):
     """T6 (GroupState runtime — works without protobuf)."""
     _run_changelog(rocksdb_spark, tmp_path, online_lww_changelog_gs)
 
-
-def test_online_lww_tws_matches_batch_lww(rocksdb_spark, tmp_path):
-    """T6 (transformWithStateInPandas runtime — protobuf state protocol)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas serializes Python<->JVM state "
-               "over protobuf; not in this container (no network installs).")
-    _run_changelog(rocksdb_spark, tmp_path, online_lww_changelog)

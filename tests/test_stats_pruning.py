@@ -84,30 +84,6 @@ def test_delta_partitions_never_prune(spark, tmp_path):
     assert len(pruned.inputFiles()) < len(t.read(spark).inputFiles())
 
 
-def test_stats_survive_spark_stats_path(spark, tmp_path):
-    """Force the executor-side stats branch (>256 files) is too slow for a
-    unit test; instead pin that _stats_via_spark returns the same stats
-    shape as the footer path on identical data."""
-    t = CdcTable(str(tmp_path / "t"), n_partitions=2, layout="key_hash",
-                 stats_cols=("score",))
-    rows = [(f"r{i}", f"p{i}", i + 1, f"v{i}", float(i), "U")
-            for i in range(8)]
-    apply_batch(spark, t, ev(spark, rows), "b0",
-                normalize=False, metrics=False)
-    snap = t.current_snapshot()
-    data_dir = f"{t.root}/{snap['files'][0]['path'].rsplit('/', 2)[0]}"
-    via_spark = t._stats_via_spark(
-        spark, data_dir, snap["files"][0]["path"].rsplit("/", 2)[0],
-        snap["schema_ddl"], "base")
-    by_path_f = {f["path"]: f for f in snap["files"]}
-    assert len(via_spark) == len(by_path_f)
-    for e in via_spark:
-        f = by_path_f[e["path"]]
-        assert e["stats"]["score"] == f["stats"]["score"]
-        assert (e["rows"], e["lsn_min"], e["lsn_max"]) == \
-            (f["rows"], f["lsn_min"], f["lsn_max"])
-
-
 def test_cluster_by_compaction_tightens_file_stats(spark, tmp_path):
     """compact(cluster_by=['score']) range-clusters files within each
     partition: per-file score ranges become near-disjoint, a narrow prune

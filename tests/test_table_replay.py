@@ -315,36 +315,6 @@ def test_commit_cas_detects_concurrent_writer(spark, tmp_path):
     assert table.lsn_high() == 2
 
 
-def test_executor_side_stats_match_footer_stats(spark, tmp_path):
-    """The large-commit stats path (one narrow Spark agg grouped by source
-    file) must produce the same manifest entries as the driver-side
-    parquet-footer reads."""
-    import datetime
-    from cdc.table.table import CdcTable
-
-    t0 = datetime.datetime(2026, 1, 1)
-    ddl = ("repo string, path string, content string, lsn long, "
-           "ts timestamp, op string, batch_id long")
-    rows = [(f"r{i%5}", f"p{i}.py", "x", i + 1, t0, "I", 0) for i in range(200)]
-    table = CdcTable(str(tmp_path / "t"), n_partitions=8)
-    table.commit_merge(spark, spark.createDataFrame(rows, ddl), "b1")
-    snap = table.current_snapshot()
-    # field ids are stamped at snapshot level (store.new_snapshot), not by
-    # the stats collectors — compare the pre-stamp entry fields
-    footer = sorted(
-        ({k: v for k, v in e.items() if k != "ids"} for e in snap["files"]),
-        key=lambda e: e["path"])
-
-    import os
-    rel_dir = "data/" + footer[0]["path"].split("/", 2)[1]
-    out_dir = os.path.join(table.root, rel_dir)
-    via_spark = sorted(
-        table._stats_via_spark(spark, out_dir, rel_dir,
-                               footer[0]["columns"], "base"),
-        key=lambda e: e["path"])
-    assert via_spark == footer
-
-
 def test_full_tail_then_grouped_resume_prunes_and_applies(spark, tmp_path):
     """Switching a table filled by a FULL-TAIL commit to grouped replay:
     the lsn high-water prune kicks in (O(remaining)) and only the new
