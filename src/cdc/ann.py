@@ -51,16 +51,15 @@ class IvfIndex:
 
     # -- quantizer lifecycle ---------------------------------------------------
     def _prop_payload(self, prop: str):
-        """A training product from the table's properties: an
+        """A training product from the table's properties, held as an
         ``artifact:`` side-file reference (written once, O(1) bytes per
-        snapshot — see ``store.write_artifact``) or, for pre-artifact
-        tables, legacy inline JSON."""
+        snapshot — see ``store.write_artifact``)."""
         from cdc.meta import store
         snap = self.table.current_snapshot()
         raw = ((snap or {}).get("properties") or {}).get(prop)
         if raw is None:
             return None
-        return store.read_artifact_ref(self.table.root, raw)
+        return store.read_artifact_ref(self.table.root, prop, raw)
 
     def centroids(self, spark: SparkSession) -> DataFrame | None:
         """The frozen quantizer as a (cid, cemb) frame, from the table's

@@ -17,8 +17,8 @@ Why this scales where recompute doesn't (SURVEY.md §2.B consumer side):
 - the change feed is pruned to partitions whose manifests changed
   (``timetravel.changed_parts``) — O(churn), not O(base table);
 - the signed delta is one map-side-partial groupBy over feed rows;
-- current MV contributions are read with manifest partition pruning +
-  a broadcast semi-join on the touched dims — O(touched groups);
+- current MV contributions are a point read of the touched dims
+  (``CdcTable.lookup_keys``) — O(touched groups);
 - the MV commit is a normal transactional merge rewriting only touched
   MV partitions, and its ledger key ``ivm-<from>-<to>`` doubles as the
   refresh checkpoint: re-running a crashed refresh is a no-op (T7
@@ -122,23 +122,14 @@ def refresh(spark: SparkSession, base: CdcTable, mv: CdcTable,
             nonzero = nonzero | ~F.col(name).eqNullSafe(F.lit(0) * F.col(name))
         delta = delta.filter(nonzero).persist()
         try:
-            touched = sorted(r[0] for r in
-                             delta.select(mv.part_of()).distinct().collect())
-            cur = mv.read(spark, parts=touched)
+            # from_id > 0: the MV has a snapshot, so the point read is a frame
+            cur = mv.lookup_keys(spark, delta.select(*dims))
             names = ["cnt", *measures]
-            if cur is None:
-                joined = delta.select(
-                    *dims, *[F.col(n).alias(f"_d_{n}") for n in names])
-                for n in names:
-                    joined = joined.withColumn(f"_c_{n}", F.lit(None))
-            else:
-                cur = cur.join(F.broadcast(delta.select(*dims)),
-                               dims, "left_semi")
-                joined = delta.select(
-                    *dims, *[F.col(n).alias(f"_d_{n}") for n in names]
-                ).join(cur.select(
-                    *dims, *[F.col(n).alias(f"_c_{n}") for n in names]),
-                    dims, "left")
+            joined = delta.select(
+                *dims, *[F.col(n).alias(f"_d_{n}") for n in names]
+            ).join(cur.select(
+                *dims, *[F.col(n).alias(f"_c_{n}") for n in names]),
+                dims, "left")
             batch = joined.select(
                 *dims,
                 *[(F.coalesce(F.col(f"_c_{n}"), F.lit(0))

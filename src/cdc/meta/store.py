@@ -128,15 +128,12 @@ def write_artifact(root: str, name: str, payload: Any) -> str:
     return ARTIFACT_REF + fname
 
 
-def read_artifact_ref(root: str, value: str) -> Any:
-    """Resolve a property value that may be an ``artifact:`` reference —
-    returns the artifact's payload, or ``json.loads(value)`` for a
-    legacy inline property (pre-artifact tables keep reading)."""
-    if value.startswith(ARTIFACT_REF):
-        with open(os.path.join(meta_dir(root),
-                               value[len(ARTIFACT_REF):])) as f:
-            return json.load(f)
-    return json.loads(value)
+def read_artifact_ref(root: str, prop: str, value: str) -> Any:
+    """The payload of property ``prop``, an ``artifact:`` reference."""
+    if not value.startswith(ARTIFACT_REF):
+        raise ValueError(f"property {prop!r} is not an artifact reference")
+    with open(os.path.join(meta_dir(root), value[len(ARTIFACT_REF):])) as f:
+        return json.load(f)
 
 
 def list_snapshots(root: str, files: bool = True) -> list[dict[str, Any]]:

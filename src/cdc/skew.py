@@ -58,8 +58,8 @@ def exact_ntile(counts: DataFrame, k: int, value_col: str = "n",
     aggregate like a per-key count: few distinct values, arbitrary
     rows). ``max_distinct_values`` enforces that assumption — a
     high-cardinality value column (e.g. a raw float score) fails fast
-    with a pointer to the windowed alternative instead of OOMing the
-    driver (``guard_quadratic`` convention: pass None to force)."""
+    instead of OOMing the driver (``guard_quadratic`` convention: pass
+    None to force)."""
     fr = counts.groupBy(value_col).agg(F.count(F.lit(1)).alias("c"))
     if max_distinct_values is not None:
         fr = fr.localCheckpoint(eager=True)   # counted + collected below
@@ -69,9 +69,8 @@ def exact_ntile(counts: DataFrame, k: int, value_col: str = "n",
                 f"exact_ntile: value column {value_col!r} has "
                 f"{n_distinct:,} distinct values (> max_distinct_values="
                 f"{max_distinct_values:,}) — the driver-side frequency "
-                f"table assumes a REDUCED value column; use a global "
-                f"ntile window (repartitionByRange + per-range ranks) "
-                f"for high-cardinality values, or pass "
+                f"table assumes a REDUCED value column; reduce it first "
+                f"(e.g. bucket or round the values), or pass "
                 f"max_distinct_values=None to force")
     freq = sorted(((r[0], r[1]) for r in fr.collect()),
                   key=lambda t: t[0], reverse=descending)

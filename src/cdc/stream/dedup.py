@@ -197,8 +197,7 @@ class EmbedFamily(DedupFamily):
                 # consumed twice (endpoint lookup + confirmation join)
                 .localCheckpoint(eager=True))
         ends = (cand.select(F.col("id_a").alias("vec_id"))
-                .unionAll(cand.select(F.col("id_b").alias("vec_id")))
-                .distinct())
+                .unionAll(cand.select(F.col("id_b").alias("vec_id"))))
         # partition-pruned point read: endpoints hash to O(batch-buckets)
         # partitions of the standing vectors table (the batch itself was
         # committed by prepare(), so one read covers both sides)
@@ -297,8 +296,7 @@ def plan_epoch(spark: SparkSession, bands: CdcTable, groups: CdcTable,
         # the epoch's only other access to the standing assignment is
         # ONE broadcast-semi scan inside the delta merge
         ends = (pairs.select(F.col(a).alias(family.id_col))
-                .unionAll(pairs.select(F.col(b).alias(family.id_col)))
-                .distinct())
+                .unionAll(pairs.select(F.col(b).alias(family.id_col))))
         probe = groups.lookup_keys(spark, ends)
         if probe is not None:
             touched = probe.select("grp")
@@ -536,8 +534,8 @@ def apply_doc_changes(spark: SparkSession, bands: CdcTable,
                              idc, "left_anti")
                   .select(F.col(idc), F.col(idc).alias("grp")))
               .localCheckpoint(eager=True))
-    prior_n = groups.lookup_keys(
-        spark, labels.select(idc).unionByName(dele).distinct())
+    prior_n = groups.lookup_keys(spark,
+                                 labels.select(idc).unionByName(dele))
     if prior_n is not None:
         prior_n = (prior_n.select(F.col(idc), "grp")
                    .localCheckpoint(eager=True))

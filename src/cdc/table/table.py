@@ -113,6 +113,37 @@ def _align_to_union(df: DataFrame, parent_ddl: str) -> DataFrame:
     return df.select(*cols)
 
 
+#: point-read probes up to this many keys filter by SQL literals (for
+#: string and int/bigint keys, with these literal suffixes); others semi-join
+_LITERAL_PROBE_CAP = 10_000
+_SQL_LITERAL = {"string": None, "bigint": "L", "int": ""}
+
+
+def _key_predicate(keys: Sequence[tuple], fields: Sequence[T.StructField]):
+    """Key membership in ``keys`` as ONE SQL literal predicate, so building
+    it is one JVM call whatever the key count: an IN per key column, which
+    parquet takes as a pushed filter, plus the exact tuple IN for a
+    composite key."""
+    def lit(v, t: str) -> str:
+        if t != "string":
+            return f"{int(v)}{_SQL_LITERAL[t]}"
+        # hex-encoded when quoting, escapes or ${} substitution could bite
+        return (f"CAST(X'{v.encode().hex()}' AS STRING)"
+                if any(c in v for c in "'\\$") else f"'{v}'")
+
+    if not keys:
+        return F.lit(False)
+    types = [f.dataType.simpleString() for f in fields]
+    lits = [[lit(v, t) for v, t in zip(k, types)] for k in keys]
+    names = [f"`{f.name}`" for f in fields]
+    preds = [f"{n} IN ({', '.join(dict.fromkeys(r[i] for r in lits))})"
+             for i, n in enumerate(names)]
+    if len(fields) > 1:
+        tuples = ", ".join("(" + ", ".join(r) + ")" for r in lits)
+        preds.append(f"({', '.join(names)}) IN ({tuples})")
+    return F.expr(" AND ".join(preds))
+
+
 class CdcTable:
     """Single-writer transactional table over Parquet + JSON snapshots."""
 
@@ -504,12 +535,18 @@ class CdcTable:
                 else self.current_snapshot())
         if snap is None:
             return None
-        tasks = scan.plan_scan(snap, parts=parts, prune=prune)
+        return self._scan(spark, snap, parts, prune, include_deleted)
+
+    def _scan(self, spark: SparkSession, snap: dict, parts=None, prune=None,
+              include_deleted: bool = False, keep=None) -> DataFrame:
+        """Plan and run a read of ``snap``. ``keep``, a key predicate,
+        narrows each layer relation before the union and the reconcile:
+        exact, as both reconcile rules work per key."""
+        tasks = scan.plan_scan(snap, parts, prune)
         target = T.StructType.fromDDL(snap["schema_ddl"])
         has_patch = any(t.reconcile == "patch" for t in tasks)
 
-        def assemble(fset: list, with_layer: bool,
-                     with_patch: bool) -> DataFrame:
+        def assemble(fset: list, layered: bool) -> DataFrame:
             # one relation per (DDL, field ids, image) group; files are
             # read under their own recorded DDL, then resolve to CURRENT
             # names by field id (renames/drops are metadata-only)
@@ -523,13 +560,17 @@ class CdcTable:
                 d = spark.read.schema(ddl).parquet(*paths)
                 d = d.select(*[F.col(n).alias(cur) for n, cur in
                                scan.column_map(snap["column_ids"], f)])
-                if with_layer:
+                # below the input_file_name projection: a filter above
+                # that nondeterministic column never reaches parquet
+                if keep is not None:
+                    d = d.filter(keep)
+                if layered:
                     # computed at scan time: input_file_name is only valid
                     # inside the scan stage, before any shuffle
                     d = d.withColumn("_layer", F.regexp_extract(
                         F.input_file_name(), scan.LAYER_PATTERN,
                         1).cast("long"))
-                    if with_patch:
+                    if has_patch:
                         d = d.withColumn("_is_patch", F.lit(is_patch))
                 dfs.append(d)
             out = dfs[0]
@@ -540,11 +581,8 @@ class CdcTable:
             cols = [(F.col(f.name) if f.name in out.columns
                      else F.lit(None)).cast(f.dataType).alias(f.name)
                     for f in target.fields]
-            if with_layer:
-                cols.append(F.col("_layer"))
-                if with_patch:
-                    cols.append(F.col("_is_patch"))
-            return out.select(*cols)
+            return out.select(*cols, *[c for c in ("_layer", "_is_patch")
+                                       if c in out.columns])
 
         dirty = [f for t in tasks if t.reconcile != "none" for f in t.files]
         clean = [f for t in tasks if t.reconcile == "none" for f in t.files]
@@ -558,7 +596,7 @@ class CdcTable:
             # partition reconciles O(that partition), not O(table).
             # Plan-pinned by
             # tests/test_plans.py::test_mor_reconcile_scoped_to_delta_parts.
-            df = assemble(dirty, with_layer=True, with_patch=has_patch)
+            df = assemble(dirty, layered=True)
             if has_patch:
                 # patch-image reconcile: per key, fold base + patch layers
                 # in COMMIT ORDER with merge_patches' exact semantics
@@ -577,81 +615,66 @@ class CdcTable:
                                       order=("_lsn", "_layer"), via="maxby")
                 df = df.drop("_layer")
             if clean:
-                df = df.unionByName(assemble(clean, with_layer=False,
-                                             with_patch=False))
+                df = df.unionByName(assemble(clean, layered=False))
             # reconcile outputs keys-first; restore the snapshot order
             df = df.select(*[f.name for f in target.fields])
         else:
-            df = assemble(clean, with_layer=False, with_patch=False)
+            df = assemble(clean, layered=False)
         if not include_deleted and "_deleted" in df.columns:
             df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
         return df.withColumn(PART_COL, self.part_of())
 
     def lookup(self, spark: SparkSession, **key) -> DataFrame | None:
-        """Index-free point read: the partition function is a pure function
-        of the key, so exactly one partition's files are scanned (manifest
-        pruning — Spark never lists the rest); inside them, the key filter
-        pushes to parquet and row groups are skipped via the sorted-key
-        min/max stats (O2 write ordering) and the per-key-column bloom
-        filters written by ``_write_data``. At 100 TB a lookup touches
-        O(table/P) bytes of metadata and O(matching row groups) of data.
-
-        ``key`` must bind every key column: ``table.lookup(spark,
-        repo='r1', path='a')``. None when the table is empty."""
-        missing = [c for c in self.key_cols if c not in key]
+        """Point read of one key (``lookup(spark, repo='r1', path='a')``
+        binds every key column): ``lookup_keys`` of a one-row probe."""
         extra = [c for c in key if c not in self.key_cols]
-        if missing or extra:
-            raise ValueError(f"lookup needs exactly the key columns "
-                             f"{self.key_cols}; missing={missing} extra={extra}")
-        beyond = [c for c in self.part_cols if c not in self.key_cols]
-        if beyond:
-            raise ValueError(
-                f"table is partitioned by {self.part_cols} — columns "
-                f"{beyond} are not part of the key, so a key-only probe "
-                f"cannot locate the partition; use lookup_keys with a "
-                f"probe frame carrying those columns, or read()")
-        # evaluate the partition function with Spark's own hash on a local
-        # 1-row relation (no files touched; constant-folds to one task).
-        # Literals are CAST to the committed schema's column types first:
-        # hash(int 5) != hash(long 5), so an untyped probe literal would
-        # hash to the wrong partition and silently return empty.
-        snap = self.current_snapshot()
-        types = ({f.name: f.dataType
-                  for f in T.StructType.fromDDL(snap["schema_ddl"]).fields}
-                 if snap and snap.get("schema_ddl") else {})
-        probe = spark.range(1).select(
-            *[(F.lit(key[c]).cast(types[c]) if c in types
-               else F.lit(key[c])).alias(c) for c in self.key_cols])
-        part = probe.select(self.part_of().alias("p")).first()["p"]
-        df = self.read(spark, parts=[part])
-        if df is None:
-            return None
-        for c in self.key_cols:
-            df = df.filter(F.col(c) == F.lit(key[c]))
-        return df
+        if extra:
+            raise ValueError(f"lookup takes only the key columns "
+                             f"{self.key_cols}; extra={extra}")
+        return self.lookup_keys(spark, spark.range(1).select(
+            *[F.lit(v).alias(c) for c, v in key.items()]))
 
     def lookup_keys(self, spark: SparkSession, keys_df: DataFrame) -> DataFrame | None:
-        """Batch point read: probe many keys at once. The probe set's
-        partition ids are collected first — bounded by ``n_partitions``
-        regardless of probe size (pmod range), never by the keys — and the
-        table read is manifest-pruned to those; a left-semi join keeps the
-        probed keys (AQE broadcasts the probe side when it is small).
-        When ``part_cols`` extends beyond the key, ``keys_df`` must also
-        carry those columns so the partition ids are computable."""
-        beyond = [c for c in self.part_cols if c not in self.key_cols]
-        lacking = [c for c in beyond if c not in keys_df.columns]
-        if lacking:
+        """Index-free point read of the keys in ``keys_df`` (plus any
+        ``part_cols`` beyond the key). ONE capped collect of the probe, cast
+        to the snapshot's types (hash(int 5) != hash(long 5)), gives its
+        distinct keys per partition; the read prunes to those partitions and
+        restricts every layer relation BELOW the MOR reconcile: by a literal
+        key predicate up to ``_LITERAL_PROBE_CAP`` keys, else by a broadcast
+        left-semi join. None when the table is empty."""
+        beyond = self._part_beyond_key()
+        missing = [c for c in (*self.key_cols, *beyond)
+                   if c not in keys_df.columns]
+        if missing:
             raise ValueError(
-                f"table is partitioned by {self.part_cols}; the probe "
-                f"frame must carry {lacking} to locate partitions")
-        probe = keys_df.select(*dict.fromkeys(self.key_cols + tuple(beyond)))
-        parts = sorted(r["p"] for r in
-                       probe.select(self.part_of().alias("p")).distinct().collect())
-        probe = probe.select(*self.key_cols)
-        df = self.read(spark, parts=parts)
-        if df is None:
+                f"table is partitioned by {self.part_cols}; the probe must "
+                f"carry the key and partition columns, missing={missing}")
+        snap = self.current_snapshot()
+        if snap is None:
             return None
-        return df.join(probe.distinct(), list(self.key_cols), "left_semi")
+        target = T.StructType.fromDDL(snap["schema_ddl"])
+        probe = (keys_df.select(*[F.col(c).cast(target[c].dataType).alias(c)
+                                  for c in (*self.key_cols, *beyond)])
+                 .select(*self.key_cols, self.part_of().alias(PART_COL))
+                 .dropna())
+        # ONE action: each touched partition with its distinct probe keys,
+        # the shipped list capped (driver memory <= n_partitions x cap)
+        rows = (probe.groupBy(PART_COL)
+                .agg(F.collect_set(F.struct(*self.key_cols)).alias("k"))
+                .select(PART_COL, F.size("k").alias("n"),
+                        F.slice("k", 1, _LITERAL_PROBE_CAP + 1).alias("k"))
+                .collect())
+        parts = [r[PART_COL] for r in rows]
+        fields = [target[c] for c in self.key_cols]
+        if (sum(r["n"] for r in rows) <= _LITERAL_PROBE_CAP
+                and all(f.dataType.simpleString() in _SQL_LITERAL
+                        for f in fields)):
+            keep = _key_predicate([tuple(k) for r in rows for k in r["k"]],
+                                  fields)
+        else:   # IN (subquery): a broadcast left-semi join per layer
+            keep = F.struct(*self.key_cols).isin(
+                F.broadcast(probe.select(*self.key_cols)))
+        return self._scan(spark, snap, parts, keep=keep)
 
     # -- write path (S6) -------------------------------------------------------
     def _write_data(self, df: DataFrame, snapshot_id: int,

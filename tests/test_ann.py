@@ -230,10 +230,11 @@ def test_train_crash_between_property_commits_heals_pq(spark, tmp_path):
     cent = ivf_train(base.select("vec_id", "embedding"), 4, 0)
     cb = pq_train(base.select("vec_id", "embedding"), m=8, k=16, iters=0)
     ix._commit_assigned(spark, base, cent, "base", cb=cb)
-    import json
-    alter.set_property(ix.table, CENTROIDS_PROP, json.dumps([
-        {"cid": r["cid"], "cemb": list(r["cemb"])}
-        for r in sorted(cent.collect(), key=lambda r: r["cid"])]))
+    from cdc.meta import store
+    alter.set_property(ix.table, CENTROIDS_PROP, store.write_artifact(
+        ix.table.root, "ivf-centroids",
+        [{"cid": r["cid"], "cemb": list(r["cemb"])}
+         for r in sorted(cent.collect(), key=lambda r: r["cid"])]))
     assert ix.pq_codebooks(spark) is None
     # the replayed train_on must land the PQ property (same codebooks)
     ix.train_on(spark, base, "base", n_centroids=4, iters=0, pq_m=8)

@@ -85,3 +85,123 @@ def test_key_columns_carry_bloom_filters(table):
         elif name == "_lsn":
             assert col.bloom_filter_offset is None
     assert checked == 2
+
+
+def test_lookup_keys_strings_survive_the_literal_predicate(spark, tmp_path):
+    """Key strings with quotes, backslashes, ${...} and non-ASCII text go
+    through the literal predicate unchanged."""
+    t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
+    keys = [("it's", "a\\b"), ("${env:HOME}", "x"), ("naïve", "日本"),
+            ("plain", "p")]
+    ev = spark.createDataFrame(
+        [(r, p, i + 1, "U", f"c{i}") for i, (r, p) in enumerate(keys)],
+        "repo string, path string, lsn long, op string, content string"
+    ).select("*", F.to_timestamp(F.lit("2026-01-01")).alias("ts"),
+             F.lit(0).alias("batch_id"))
+    apply_batch(spark, t, ev, "b0", normalize=False, metrics=False)
+    probe = spark.createDataFrame(keys[:3], "repo string, path string")
+    got = {(r.repo, r.path) for r in t.lookup_keys(spark, probe).collect()}
+    assert got == set(keys[:3])
+    assert t.lookup(spark, repo="it's", path="a\\b").count() == 1
+
+
+# -- typed probes ---------------------------------------------------------------
+
+def _long_keyed(spark, root, n=50, n_partitions=16):
+    t = CdcTable(root, key_cols=("doc_id",), n_partitions=n_partitions,
+                 layout="key_hash")
+    rows = spark.createDataFrame(
+        [(i, f"c{i}") for i in range(n)], "doc_id long, content string"
+    ).select("*", F.lit(1).alias("lsn"), F.lit("U").alias("op"),
+             F.to_timestamp(F.lit("2026-01-01")).alias("ts"),
+             F.lit(0).alias("batch_id"))
+    t.commit_merge(spark, rows, "b0")
+    return t
+
+
+def test_lookup_casts_probe_literals(spark, tmp_path):
+    """A python-int probe against a LongType key must hash to the SAME
+    partition the row was written to (hash(int 5) != hash(long 5))."""
+    t = _long_keyed(spark, str(tmp_path / "t"))
+    for k in (5, 17, 42):   # plain python ints
+        got = t.lookup(spark, doc_id=k)
+        assert got is not None and got.count() == 1, k
+
+
+def test_lookup_keys_casts_int_probe(spark, tmp_path, monkeypatch):
+    """An int-typed probe frame against a bigint key: uncast, hash(int)
+    locates the wrong partitions and most keys are silently missed."""
+    t = _long_keyed(spark, str(tmp_path / "t"), n=100, n_partitions=8)
+    ids = list(range(3, 93, 9))
+    for ddl in ("doc_id int", "doc_id long"):
+        probe = spark.createDataFrame([(i,) for i in ids], ddl)
+        got = t.lookup_keys(spark, probe)
+        assert sorted(r.doc_id for r in got.collect()) == ids, ddl
+    # the same through the semi-join restriction (single-column key)
+    from cdc.table import table as table_mod
+    monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", 0)
+    got = t.lookup_keys(spark, probe)
+    assert sorted(r.doc_id for r in got.collect()) == ids
+
+
+# -- differential: literal and semi-join restriction == pure-Python reducer -----
+
+_PROBE = ("a", "b", "c", "e", "f", "zz")   # zz is never written
+
+
+def _check_lookups(spark, t, model, monkeypatch):
+    """lookup_keys over every probe key must equal the reducer's state,
+    through the literal key predicate AND through the broadcast semi-join
+    (cap forced to 0); so must lookup of each live key."""
+    from cdc.table import table as table_mod
+
+    cols = [*model.cols, "_lsn", "_content_sha256"]
+    want = {k: v for k, v in model.live().items() if k[1] in _PROBE}
+    for key, row in want.items():
+        one = t.lookup(spark, repo=key[0], path=key[1]).collect()
+        assert [tuple(r[c] for c in cols) for r in one] == [row], key
+    probe = spark.createDataFrame([("r", k) for k in _PROBE],
+                                  "repo string, path string")
+    cap = table_mod._LITERAL_PROBE_CAP
+    for limit in (cap, 0):
+        monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", limit)
+        got = {(r.repo, r.path): tuple(r[c] for c in cols)
+               for r in t.lookup_keys(spark, probe).collect()}
+        assert got == want, limit
+    monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", cap)
+    # composite-key exactness: (r, e) is in the per-column cross product
+    # of this probe but is not a probed key
+    cross = spark.createDataFrame([("r", "a"), ("q", "e")],
+                                  "repo string, path string")
+    got = {(r.repo, r.path) for r in t.lookup_keys(spark, cross).collect()}
+    assert got == {k for k in want if k == ("r", "a")}
+
+
+def test_point_reads_match_reducer(spark, tmp_path, monkeypatch):
+    """Probe keys that are present, deleted, absent, only in a row delta,
+    read after a non-key column rename, and only in a patch delta, on an
+    uncompacted MOR table (the runner compacts the row deltas before the
+    patch commits, as commit_delta requires). Every ('check',) step runs
+    the point reads."""
+    import test_scan
+
+    monkeypatch.setattr(test_scan, "_check", lambda sp, t, m:
+                        _check_lookups(sp, t, m, monkeypatch))
+    t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
+    model = test_scan._Model()
+    seen = test_scan._run(spark, t, [
+        ("cow", [("a", "U", "x1", "p1"), ("b", "U", "y1", "q1"),
+                 ("c", "U", "z1", None)], False),
+        ("mor", [("a", "U", "x2", "p2"), ("b", "D", None, None),
+                 ("e", "U", "e1", "r1")], False),
+        ("mor", [("a", "U", "late", "late")], True),
+        ("check",),
+        ("rename",),
+        ("check",),
+        ("patch", [("a", "U", None, "p3"), ("f", "U", "f1", None)], False),
+        ("patch", [("c", "D", None, None)], False),
+        ("check",),
+    ], model)
+    assert "row" in seen[0] and "row" in seen[1] and "patch" in seen[2]
+    assert model.alt == "w"
+    assert model.live().keys() == {("r", "a"), ("r", "e"), ("r", "f")}

@@ -267,6 +267,39 @@ def test_mor_reconcile_scoped_to_delta_parts(spark, tmp_path, monkeypatch):
     assert got[("r0", "p0")] == "v0+d" and got[("r63", "p63")] == "v63"
 
 
+def test_mor_lookup_filters_keys_below_reconcile(spark, tmp_path):
+    """A point read of a key in a delta-carrying partition restricts every
+    layer relation BEFORE the reconcile: the key predicate is a parquet
+    pushed filter on each FileScan under the Aggregate, and no join is left
+    above it."""
+    from cdc.pipeline import apply_batch
+    from cdc.table.table import CdcTable
+
+    t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
+    base = (spark.createDataFrame(
+                [(f"r{i}", f"p{i}", i + 1, f"v{i}", "U") for i in range(32)],
+                "repo string, path string, lsn long, content string, "
+                "op string")
+            .select("*", F.to_timestamp(F.lit("2026-01-01")).alias("ts"),
+                    F.lit(0).alias("batch_id")))
+    apply_batch(spark, t, base, "b0", normalize=False, metrics=False)
+    delta = base.filter("path = 'p3'").withColumn("lsn", F.lit(100))
+    apply_batch(spark, t, delta, "b1", normalize=False, metrics=False,
+                mode="mor")
+    got = t.lookup(spark, repo="r3", path="p3")
+    assert [r._lsn for r in got.collect()] == [100]
+    plan = executed_plan_of(got).split("== Initial Plan ==")[0]
+    lines = plan.splitlines()
+    agg = next(i for i, ln in enumerate(lines) if "Aggregate" in ln)
+    scans = [ln for ln in lines if "FileScan" in ln]
+    assert len(scans) == 2, plan      # base + delta layer of one partition
+    assert all(lines.index(ln) > agg for ln in scans), plan
+    for ln in scans:
+        pushed = ln.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert "EqualTo(repo,r3)" in pushed and "EqualTo(path,p3)" in pushed
+    assert "Join" not in plan
+
+
 def test_bloom_prefilter_is_map_side(spark):
     """The bloom probe must be a map-side filter: an ArrowEvalPython stage
     over the scan with NO Exchange anywhere in the prefiltered frame's

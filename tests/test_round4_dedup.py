@@ -151,16 +151,18 @@ def test_epoch_io_is_bucket_pruned_and_o_churn(spark, tmp_path, monkeypatch):
     assert groups.read(spark).count() == 2   # {3, 9000}
 
     reads = {"bands": [], "groups": []}
-    orig_read = CdcTable.read
+    orig_scan = CdcTable._scan
 
-    def spy_read(self, spark_, parts=None, **kw):
+    # every table read plans through _scan: read() and the lookup_keys
+    # point read alike
+    def spy_scan(self, spark_, snap, parts=None, *a, **kw):
         if self.root == bands.root:
             reads["bands"].append(parts)
         elif self.root == groups.root:
             reads["groups"].append(parts)
-        return orig_read(self, spark_, parts=parts, **kw)
+        return orig_scan(self, spark_, snap, parts, *a, **kw)
 
-    monkeypatch.setattr(CdcTable, "read", spy_read)
+    monkeypatch.setattr(CdcTable, "_scan", spy_scan)
 
     sizes = []
     DFCls = type(spark.range(1))   # the concrete (classic) DataFrame class
@@ -204,7 +206,7 @@ def test_epoch_io_is_bucket_pruned_and_o_churn(spark, tmp_path, monkeypatch):
     assert sizes and max(sizes) <= 25, (sizes, corpus_band_rows)
 
     # and committing the epoch lands exactly the one-shot truth
-    monkeypatch.setattr(CdcTable, "read", orig_read)
+    monkeypatch.setattr(CdcTable, "_scan", orig_scan)
     monkeypatch.setattr(DFCls, "localCheckpoint", orig_ckpt)
     ingest_dedup_batch(spark, bands, groups, batch, "e1")
     from cdc.cc import connected_components

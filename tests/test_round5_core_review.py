@@ -186,24 +186,6 @@ def test_as_of_parses_offset_strings(spark, tmp_path):
     assert t._resolve_as_of(after_z) == t.current_snapshot()["snapshot_id"]
 
 
-# -- typed lookup literals ------------------------------------------------------
-
-def test_lookup_casts_probe_literals(spark, tmp_path):
-    """A python-int probe against a LongType key must hash to the SAME
-    partition the row was written to (hash(int 5) != hash(long 5))."""
-    t = CdcTable(str(tmp_path / "t"), key_cols=("doc_id",),
-                 n_partitions=16, layout="key_hash")
-    rows = spark.createDataFrame(
-        [(i, f"c{i}") for i in range(50)], "doc_id long, content string"
-    ).select("*", F.lit(1).alias("lsn"), F.lit("U").alias("op"),
-             F.to_timestamp(F.lit("2026-01-01")).alias("ts"),
-             F.lit(0).alias("batch_id"))
-    t.commit_merge(spark, rows, "b0")
-    for k in (5, 17, 42):   # plain python ints
-        got = t.lookup(spark, doc_id=k)
-        assert got is not None and got.count() == 1, k
-
-
 # -- footer stats by leaf path --------------------------------------------------
 
 def test_footer_stats_survive_struct_column(spark, tmp_path):

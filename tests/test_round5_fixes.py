@@ -114,12 +114,13 @@ def test_quantizer_artifact_sidefile(spark, tmp_path):
     assert big.search(spark, _vecs(spark, [3], dim=64), k=3, nprobe=4,
                       adc=True).count() >= 1
 
-    # legacy inline property (pre-artifact table) still reads
+    # an inline (non-artifact) property value is refused, naming the property
     from cdc.table import alter
     inline = json.dumps([{"cid": 0, "cemb": [0.1] * 8},
                          {"cid": 1, "cemb": [0.9] * 8}])
     alter.set_property(small.table, CENTROIDS_PROP, inline)
-    assert small.centroids(spark).count() == 2
+    with pytest.raises(ValueError, match=CENTROIDS_PROP):
+        small.centroids(spark)
 
     # vacuum: referenced artifacts survive, an orphan goes
     orphan = os.path.join(store.meta_dir(big.table.root),
