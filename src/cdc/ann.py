@@ -244,20 +244,13 @@ class IvfIndex:
     # -- read side ----------------------------------------------------------------
     def assignment(self, spark: SparkSession,
                    centroids: list[int] | None = None) -> DataFrame | None:
-        """The standing assignment; ``centroids`` prunes the read to
-        those clusters' partitions (superset via hash — the exact filter
-        is applied on top)."""
+        """The standing assignment; ``centroids`` reads only those
+        clusters' rows: ``lookup_keys`` on a centroid probe (``centroid``
+        is the table's partition column)."""
         if centroids is None:
             return self.table.read(spark)
-        probe = spark.createDataFrame([(int(c),) for c in centroids],
-                                      "centroid int")
-        parts = sorted(r["p"] for r in
-                       probe.select(self.table.part_of().alias("p"))
-                       .distinct().collect())
-        df = self.table.read(spark, parts=parts)
-        if df is None:
-            return None
-        return df.join(F.broadcast(probe), "centroid", "left_semi")
+        return self.table.lookup_keys(spark, spark.createDataFrame(
+            [(int(c),) for c in centroids], "centroid int"))
 
     def search(self, spark: SparkSession, queries: DataFrame, k: int,
                nprobe: int = 1, adc: bool = False) -> DataFrame:

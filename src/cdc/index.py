@@ -18,9 +18,9 @@ The refresh is exactly-once via the index's own ledger (``idx-<from>-
 advance the index in lock-step with ingest.
 
 Cost model at scale: refresh is O(churned base partitions) for the feed +
-one small shuffle of the netted (value, key) deltas; a lookup costs one
-index-partition read (bloom/row-group skipping applies — the index rows
-are key-sorted like any table) + ``base.lookup_keys`` over the hits.
+one small shuffle of the netted (value, key) deltas; a lookup is two
+``CdcTable.lookup_keys`` point reads: the index on the value (one index
+partition) and the base on the hits.
 NULL values are not indexed (SQL index semantics: IS NULL scans).
 """
 
@@ -109,20 +109,19 @@ def maintainer(idx: CdcTable):
 
 def lookup_value(spark: SparkSession, base: CdcTable, idx: CdcTable,
                  value) -> DataFrame:
-    """Point lookup by indexed value: probe ONE index partition for the
-    matching keys, then ``base.lookup_keys`` — never a base scan."""
+    """Point lookup by indexed value: ``idx.lookup_keys`` on the value (ONE
+    index partition, the value cast to the column's type), then
+    ``base.lookup_keys`` on the hits — never a base scan."""
     column = idx.key_cols[0]
-    probe = spark.range(1).select(F.lit(value).alias(column))
-    part = probe.select(idx.part_of().alias("p")).first()["p"]
-    rows = idx.read(spark, parts=[part])
+    rows = idx.lookup_keys(spark, spark.range(1).select(
+        F.lit(value).alias(column)))
     if rows is None:
         # an index table with no commits yet reads as None; surface the
-        # operational fix instead of an AttributeError on rows.filter
+        # operational fix instead of an AttributeError downstream
         raise ValueError(
             f"index at {idx.root} has no commits yet — run "
             f"index.refresh(spark, base, idx) before point lookups")
-    hits = rows.filter(F.col(column) == F.lit(value)) \
-               .select(*base.key_cols)
+    hits = rows.select(*base.key_cols)
     out = base.lookup_keys(spark, hits)
     if out is None:
         return hits

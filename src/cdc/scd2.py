@@ -11,10 +11,10 @@ base commit for per-commit fidelity.
 Refresh cost is O(churn), never O(history):
 - the pre/post-image feed is manifest-diff pruned (timetravel.changed_parts);
 - new versions come straight from post-images (no history read);
-- retirements read ONLY the history partitions holding touched entities —
-  the history table uses the ``repo_hash`` layout, whose partition function
-  depends on the first key column alone, so the probe's partitions are
-  computable from the feed side;
+- retirements are ``hist.lookup_keys`` on the touched base keys — the
+  history table uses the ``repo_hash`` layout, whose partition function
+  reads the first key column alone, so a base-key probe (a prefix of the
+  history key) routes to the partitions holding those entities;
 - the commit is a normal transactional merge (ledger key
   ``scd2-<from>-<to>`` = the refresh checkpoint, same exactly-once story
   as cdc.ivm).
@@ -100,14 +100,10 @@ def refresh_history(spark: SparkSession, base: CdcTable,
         try:
             opens = (feed.filter(F.col("_change_type").isin(*_OPENS))
                      .select(*keys, *vals, F.col("_lsn").alias("row_lsn")))
-            pre_keys = (feed.filter(F.col("_change_type").isin(*_CLOSES))
-                        .select(*keys).distinct())
-            parts = sorted(r["p"] for r in pre_keys
-                           .select(hist.part_of().alias("p")).distinct().collect())
-            cur = hist.read(spark, parts=parts)
+            cur = hist.lookup_keys(spark, feed.filter(
+                F.col("_change_type").isin(*_CLOSES)).select(*keys))
             if cur is not None:
-                cur = cur.filter(F.col("valid_to_snap").isNull())
-                closes = (cur.join(F.broadcast(pre_keys), keys, "left_semi")
+                closes = (cur.filter(F.col("valid_to_snap").isNull())
                           .select(*keys, "valid_from_snap", *vals, "row_lsn")
                           .withColumn("valid_to_snap", F.lit(to_id).cast("long")))
             else:

@@ -8,8 +8,9 @@ Each micro-batch of new documents:
    band table — O(batch), the corpus is never re-shingled/re-hashed. The
    band table is laid out with ``part_cols`` = the bucket columns
    (e.g. (band, bucket)) while keyed per (doc_id, band), so the probe
-   reads ONLY the partitions the batch's buckets hash to (manifest
-   pruning) — an epoch never scans the full standing band table;
+   (``lookup_keys`` on the batch's bucket values) reads ONLY the standing
+   rows in those buckets: an epoch never scans the full standing band
+   table;
 2. merges the resulting candidate pairs into the STANDING component
    assignment via ``cc.connected_components_incremental_delta`` —
    O(churn) END-TO-END: untouched components never enter a CC round,
@@ -223,11 +224,8 @@ def dedup_tables(bands_root: str, groups_root: str,
     layout, so the O(churn) upsert commits with zero extra repartition
     and touched-label probes are partition-pruned point reads.
 
-    An EXISTING table at either root is opened with its RECORDED layout
-    (a standing pipeline created before the bucket-partitioned layout
-    keeps working — correctness never depended on the layout, only the
-    probe pruning does, and ``plan_epoch`` prunes only when the layout
-    matches). New roots get the bucket layout."""
+    An EXISTING table at either root is opened with its RECORDED layout;
+    a bands table not partitioned by ``family.bands_parts`` is refused."""
     from cdc.meta import store
 
     def make(root, key_cols, part_cols):
@@ -238,6 +236,11 @@ def dedup_tables(bands_root: str, groups_root: str,
                         part_cols=part_cols)
 
     bands = make(bands_root, family.bands_key, family.bands_parts)
+    if bands.part_cols != tuple(family.bands_parts):
+        raise ValueError(
+            f"band table at {bands_root} is partitioned by "
+            f"{bands.part_cols}, not the bucket columns "
+            f"{tuple(family.bands_parts)}; rebuild it under a new root")
     groups = make(groups_root, (family.id_col,), None)
     return bands, groups
 
@@ -262,22 +265,14 @@ def plan_epoch(spark: SparkSession, bands: CdcTable, groups: CdcTable,
     family.prepare(spark, docs, lsn, key)
 
     nb = (family.bands(docs)
-          # consumed several times (part-set collect, probe, union,
-          # commit) — don't run the signature pipeline per consumer
+          # consumed several times (probe collect, union, commit) — don't
+          # run the signature pipeline per consumer
           .localCheckpoint(eager=True))
-    # bucket-local probe: the standing band table is partitioned by the
-    # bucket columns, so ONLY the partitions the batch's buckets hash to
-    # are read — bounded by the batch's bucket set, never the corpus.
-    # A LEGACY table partitioned by the key (pre-bucket layout, opened by
-    # dedup_tables) must NOT prune: matching standing rows hash by their
-    # own doc id, not the probe's buckets — prune only when the layout
-    # is the bucket one.
-    if tuple(bands.part_cols) == tuple(family.bands_parts):
-        parts = sorted(r["p"] for r in nb.select(
-            bands.part_of().alias("p")).distinct().collect())
-    else:
-        parts = None
-    st = bands.read(spark, parts=parts)
+    # bucket-local probe: every family pairs on equality of the bucket
+    # columns, which are the band table's part_cols, so only standing rows
+    # in the batch's buckets can pair — read O(batch buckets), not the
+    # corpus
+    st = bands.lookup_keys(spark, nb.select(*family.bands_parts))
     cols = [f.split()[0] for f in family.bands_schema.split(",")]
     standing_b = (st.select(*cols) if st is not None
                   else spark.createDataFrame([], family.bands_schema))
@@ -372,18 +367,15 @@ def _members_of(spark: SparkSession, groups: CdcTable,
                 grps: DataFrame, members: CdcTable | None,
                 id_col: str) -> DataFrame:
     """ids of every row whose grp is in ``grps`` (one column, distinct).
-    With a ``members`` index: a partition-pruned point read (O(touched
-    components)). Without: a full scan of the (narrow) groups table —
-    correct, but O(corpus) per U/D epoch; supply the index at scale."""
+    With a ``members`` index: ``members.lookup_keys`` on the grp values
+    (O(touched components)). Without: a full scan of the (narrow) groups
+    table — correct, but O(corpus) per U/D epoch; supply the index at
+    scale."""
     if members is not None:
-        parts = sorted(r["p"] for r in
-                       grps.select(members.part_of().alias("p"))
-                       .distinct().collect())
-        rows = members.read(spark, parts=parts)
+        rows = members.lookup_keys(spark, grps)
         if rows is None:
             return spark.createDataFrame([], f"{id_col} long")
-        return (rows.join(F.broadcast(grps), "grp", "left_semi")
-                .select(F.col(members.key_cols[1]).alias(id_col))
+        return (rows.select(F.col(members.key_cols[1]).alias(id_col))
                 .distinct())
     full = groups.read(spark)
     if full is None:
@@ -489,12 +481,7 @@ def apply_doc_changes(spark: SparkSession, bands: CdcTable,
     # read already contains `insert` and no longer contains `retire`) —
     # used ONLY to pull the endpoints' components into the rebuild set;
     # the rebuild recomputes every edge it needs from current payloads.
-    if tuple(bands.part_cols) == tuple(family.bands_parts):
-        parts = sorted(r["p"] for r in insert.select(
-            bands.part_of().alias("p")).distinct().collect())
-    else:
-        parts = None
-    st = bands.read(spark, parts=parts)
+    st = bands.lookup_keys(spark, insert.select(*family.bands_parts))
     standing_b = (st.select(*band_cols) if st is not None
                   else spark.createDataFrame([], family.bands_schema))
     a, b = family.pair_cols

@@ -114,16 +114,18 @@ def _align_to_union(df: DataFrame, parent_ddl: str) -> DataFrame:
 
 
 #: point-read probes up to this many keys filter by SQL literals (for
-#: string and int/bigint keys, with these literal suffixes); others semi-join
-_LITERAL_PROBE_CAP = 10_000
+#: string and int/bigint keys, with these literal suffixes); others semi-join.
+#: 500 is the measured crossover for two-column probes (4-core host): the
+#: literal costs ~1.3x the semi-join at 1k values and ~4x at 10k
+_LITERAL_PROBE_CAP = 500
 _SQL_LITERAL = {"string": None, "bigint": "L", "int": ""}
 
 
 def _key_predicate(keys: Sequence[tuple], fields: Sequence[T.StructField]):
-    """Key membership in ``keys`` as ONE SQL literal predicate, so building
-    it is one JVM call whatever the key count: an IN per key column, which
-    parquet takes as a pushed filter, plus the exact tuple IN for a
-    composite key."""
+    """Membership of the ``fields`` columns in ``keys`` as ONE SQL literal
+    predicate, so building it is one JVM call whatever the key count: an
+    IN per column, which parquet takes as a pushed filter, plus the exact
+    tuple IN for several columns."""
     def lit(v, t: str) -> str:
         if t != "string":
             return f"{int(v)}{_SQL_LITERAL[t]}"
@@ -628,52 +630,58 @@ class CdcTable:
         """Point read of one key (``lookup(spark, repo='r1', path='a')``
         binds every key column): ``lookup_keys`` of a one-row probe."""
         extra = [c for c in key if c not in self.key_cols]
-        if extra:
-            raise ValueError(f"lookup takes only the key columns "
-                             f"{self.key_cols}; extra={extra}")
+        missing = [c for c in self.key_cols if c not in key]
+        if extra or missing:
+            raise ValueError(f"lookup binds exactly the key columns "
+                             f"{self.key_cols}; missing={missing}, "
+                             f"extra={extra}")
         return self.lookup_keys(spark, spark.range(1).select(
             *[F.lit(v).alias(c) for c, v in key.items()]))
 
     def lookup_keys(self, spark: SparkSession, keys_df: DataFrame) -> DataFrame | None:
-        """Index-free point read of the keys in ``keys_df`` (plus any
-        ``part_cols`` beyond the key). ONE capped collect of the probe, cast
-        to the snapshot's types (hash(int 5) != hash(long 5)), gives its
-        distinct keys per partition; the read prunes to those partitions and
-        restricts every layer relation BELOW the MOR reconcile: by a literal
-        key predicate up to ``_LITERAL_PROBE_CAP`` keys, else by a broadcast
-        left-semi join. None when the table is empty."""
-        beyond = self._part_beyond_key()
-        missing = [c for c in (*self.key_cols, *beyond)
-                   if c not in keys_df.columns]
+        """Point read of the rows matching ``keys_df``: the probe carries the
+        columns the partition function reads (``part_cols``; ``repo_hash``:
+        the first) and restricts on every key or part column it carries.
+        ONE capped collect of the probe, cast to the snapshot's types
+        (hash(int 5) != hash(long 5)), gives its distinct values per
+        partition; the read prunes to those partitions and restricts every
+        layer relation BELOW the MOR reconcile (exact: key columns are
+        constant and part columns immutable per key) by a literal predicate
+        up to ``_LITERAL_PROBE_CAP`` values, else by a broadcast left-semi
+        join. None when the table is empty."""
+        routed = (self.part_cols if self.layout == "key_hash"
+                  else self.part_cols[:1])
+        missing = [c for c in routed if c not in keys_df.columns]
         if missing:
             raise ValueError(
                 f"table is partitioned by {self.part_cols}; the probe must "
-                f"carry the key and partition columns, missing={missing}")
+                f"carry the partition columns, missing={missing}")
         snap = self.current_snapshot()
         if snap is None:
             return None
         target = T.StructType.fromDDL(snap["schema_ddl"])
+        cols = [c for c in (*self.key_cols, *self._part_beyond_key())
+                if c in keys_df.columns]
         probe = (keys_df.select(*[F.col(c).cast(target[c].dataType).alias(c)
-                                  for c in (*self.key_cols, *beyond)])
-                 .select(*self.key_cols, self.part_of().alias(PART_COL))
+                                  for c in cols])
+                 .select(*cols, self.part_of().alias(PART_COL))
                  .dropna())
-        # ONE action: each touched partition with its distinct probe keys,
+        # ONE action: each touched partition with its distinct probe values,
         # the shipped list capped (driver memory <= n_partitions x cap)
         rows = (probe.groupBy(PART_COL)
-                .agg(F.collect_set(F.struct(*self.key_cols)).alias("k"))
+                .agg(F.collect_set(F.struct(*cols)).alias("k"))
                 .select(PART_COL, F.size("k").alias("n"),
                         F.slice("k", 1, _LITERAL_PROBE_CAP + 1).alias("k"))
                 .collect())
         parts = [r[PART_COL] for r in rows]
-        fields = [target[c] for c in self.key_cols]
+        fields = [target[c] for c in cols]
         if (sum(r["n"] for r in rows) <= _LITERAL_PROBE_CAP
                 and all(f.dataType.simpleString() in _SQL_LITERAL
                         for f in fields)):
             keep = _key_predicate([tuple(k) for r in rows for k in r["k"]],
                                   fields)
         else:   # IN (subquery): a broadcast left-semi join per layer
-            keep = F.struct(*self.key_cols).isin(
-                F.broadcast(probe.select(*self.key_cols)))
+            keep = F.struct(*cols).isin(F.broadcast(probe.select(*cols)))
         return self._scan(spark, snap, parts, keep=keep)
 
     # -- write path (S6) -------------------------------------------------------

@@ -44,13 +44,14 @@ def test_search_reads_only_probed_partitions(spark, idx, monkeypatch):
     """The standing search must manifest-prune to the probed centroids'
     partitions — fewer files than the table holds."""
     reads = []
-    orig = CdcTable.read
+    orig = CdcTable._scan
 
-    def spy(self, spark_, parts=None, **kw):
+    # every table read plans through _scan, lookup_keys probes included
+    def spy(self, spark_, snap, parts=None, *a, **kw):
         reads.append(parts)
-        return orig(self, spark_, parts=parts, **kw)
+        return orig(self, spark_, snap, parts, *a, **kw)
 
-    monkeypatch.setattr(CdcTable, "read", spy)
+    monkeypatch.setattr(CdcTable, "_scan", spy)
     idx.search(spark, _vecs(spark, [5]), k=3, nprobe=1).collect()
     pruned = [p for p in reads if p is not None]
     assert pruned and len(pruned[0]) < idx.table.n_partitions

@@ -69,7 +69,7 @@ def test_secondary_index_lifecycle(spark, tmp_path):
         index.create_index(str(tmp_path / "idx2"), base, "repo")
 
 
-def test_index_lookup_prunes_to_one_partition(spark, tmp_path):
+def test_index_lookup_prunes_to_one_partition(spark, tmp_path, monkeypatch):
     """The probe reads exactly the index partition the value hashes to —
     manifest pruning, no index scan."""
     base = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
@@ -89,8 +89,41 @@ def test_index_lookup_prunes_to_one_partition(spark, tmp_path):
     scanned = idx.read(spark, parts=[part]).inputFiles()
     assert len(scanned) == n_part_files < n_all_files
     assert all(f"part={part}" in f for f in scanned)
+
+    # lookup_value's own index probe scans files of that one partition
+    probes = []
+    orig = CdcTable._scan
+
+    def spy(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        if self.root == idx.root:
+            probes.append(out)
+        return out
+
+    monkeypatch.setattr(CdcTable, "_scan", spy)
     assert keys_for(spark, base, idx, "lang3") == \
         sorted((f"r{i}", f"p{i}") for i in range(3, 56, 7))
+    assert len(probes) == 1
+    assert {f.rsplit("/", 2)[-2] for f in probes[0].inputFiles()} == \
+        {f"part={part}"}
+
+
+def test_lookup_value_casts_the_probe(spark, tmp_path):
+    """A python-int value on a bigint indexed column must route to the
+    index partition the value was written to (hash(int) != hash(long))."""
+    base = CdcTable(str(tmp_path / "t"), key_cols=("id",), n_partitions=4,
+                    layout="key_hash")
+    rows = spark.range(40).select(
+        "id", (F.col("id") % 10).alias("n"), F.col("id").alias("lsn"),
+        F.lit("U").alias("op"), F.lit(0).alias("batch_id"),
+        F.to_timestamp(F.lit("2026-01-01")).alias("ts"))
+    base.commit_merge(spark, rows, "b0")
+    idx = index.create_index(str(tmp_path / "idx"), base, "n")
+    index.refresh(spark, base, idx)
+    for v in range(10):
+        got = index.lookup_value(spark, base, idx, v)
+        assert sorted(r.id for r in got.collect()) == \
+            list(range(v, 40, 10)), v
 
 
 @pytest.mark.slow

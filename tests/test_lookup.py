@@ -149,12 +149,24 @@ def test_lookup_keys_casts_int_probe(spark, tmp_path, monkeypatch):
 _PROBE = ("a", "b", "c", "e", "f", "zz")   # zz is never written
 
 
+def _lookup_both_ways(spark, t, probe, row, monkeypatch) -> list[set]:
+    """``lookup_keys(probe)`` as a set of ``row(r)``, through the literal
+    predicate and through the broadcast semi-join (cap forced to 0)."""
+    from cdc.table import table as table_mod
+
+    cap = table_mod._LITERAL_PROBE_CAP
+    got = []
+    for limit in (cap, 0):
+        monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", limit)
+        got.append({row(r) for r in t.lookup_keys(spark, probe).collect()})
+    monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", cap)
+    return got
+
+
 def _check_lookups(spark, t, model, monkeypatch):
     """lookup_keys over every probe key must equal the reducer's state,
     through the literal key predicate AND through the broadcast semi-join
     (cap forced to 0); so must lookup of each live key."""
-    from cdc.table import table as table_mod
-
     cols = [*model.cols, "_lsn", "_content_sha256"]
     want = {k: v for k, v in model.live().items() if k[1] in _PROBE}
     for key, row in want.items():
@@ -162,13 +174,10 @@ def _check_lookups(spark, t, model, monkeypatch):
         assert [tuple(r[c] for c in cols) for r in one] == [row], key
     probe = spark.createDataFrame([("r", k) for k in _PROBE],
                                   "repo string, path string")
-    cap = table_mod._LITERAL_PROBE_CAP
-    for limit in (cap, 0):
-        monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", limit)
-        got = {(r.repo, r.path): tuple(r[c] for c in cols)
-               for r in t.lookup_keys(spark, probe).collect()}
-        assert got == want, limit
-    monkeypatch.setattr(table_mod, "_LITERAL_PROBE_CAP", cap)
+    assert _lookup_both_ways(
+        spark, t, probe,
+        lambda r: ((r.repo, r.path), tuple(r[c] for c in cols)),
+        monkeypatch) == [set(want.items())] * 2
     # composite-key exactness: (r, e) is in the per-column cross product
     # of this probe but is not a probed key
     cross = spark.createDataFrame([("r", "a"), ("q", "e")],
@@ -182,7 +191,9 @@ def test_point_reads_match_reducer(spark, tmp_path, monkeypatch):
     read after a non-key column rename, and only in a patch delta, on an
     uncompacted MOR table (the runner compacts the row deltas before the
     patch commits, as commit_delta requires). Every ('check',) step runs
-    the point reads."""
+    the point reads. Then the two narrower probe shapes: a key prefix on a
+    repo_hash table and a bare partition-column probe on a part_cols
+    table, both over uncompacted deltas."""
     import test_scan
 
     monkeypatch.setattr(test_scan, "_check", lambda sp, t, m:
@@ -205,3 +216,65 @@ def test_point_reads_match_reducer(spark, tmp_path, monkeypatch):
     assert "row" in seen[0] and "row" in seen[1] and "patch" in seen[2]
     assert model.alt == "w"
     assert model.live().keys() == {("r", "a"), ("r", "e"), ("r", "f")}
+
+    # a key-prefix probe (repo only) on a repo_hash MOR table: deltas that
+    # update, delete and lose late, over several repos and partitions
+    rh = CdcTable(str(tmp_path / "rh"), n_partitions=4, layout="repo_hash")
+    batches = [
+        [(f"r{i}", p, 2 * i + j + 1, "U", f"r{i}{p}0")
+         for i in range(6) for j, p in enumerate("ab")],
+        [("r1", "a", 20, "U", "r1a1"), ("r1", "b", 21, "D", None),
+         ("r3", "a", 22, "U", "r3a1"), ("r2", "a", 23, "D", None)],
+        [("r1", "a", 5, "U", "late"), ("r3", "b", 24, "U", "r3b1"),
+         ("r4", "a", 0, "D", None)],
+    ]
+    state = {}
+    for i, rows in enumerate(batches):
+        frame = spark.createDataFrame(
+            rows, "repo string, path string, lsn long, op string, "
+                  "content string"
+        ).select("*", F.to_timestamp(F.lit("2026-01-01")).alias("ts"),
+                 F.lit(i).alias("batch_id"))
+        apply_batch(spark, rh, frame, f"b{i}", normalize=False,
+                    metrics=False, lww_via="maxby",
+                    mode="cow" if i == 0 else "mor")
+        for repo, path, lsn, op, content in rows:
+            if lsn >= state.get((repo, path), (-1,))[0]:
+                state[(repo, path)] = (lsn, op, content)
+    assert any(f.get("kind") == "delta"
+               for f in rh.current_snapshot()["files"])
+    want = {((repo, path), (content, lsn))
+            for (repo, path), (lsn, op, content) in state.items()
+            if op != "D" and repo in ("r1", "r3")}
+    probe = spark.createDataFrame([("r1",), ("r3",), ("zz",)], "repo string")
+    assert _lookup_both_ways(
+        spark, rh, probe, lambda r: ((r.repo, r.path), (r.content, r._lsn)),
+        monkeypatch) == [want] * 2
+
+    # a part_cols-only probe on a part_cols MOR table: doc 1 moves bucket
+    # k1 -> k2 (a tombstone carrying the OLD bucket, then the new row),
+    # doc 5 is deleted and doc 9 updated in place
+    pc = CdcTable(str(tmp_path / "pc"), key_cols=("doc_id",),
+                  n_partitions=4, layout="key_hash", part_cols=("bucket",))
+    moves = [[(i, f"k{i % 4}", f"c{i}", 1, "U") for i in range(12)],
+             [(1, "k1", None, 2, "D"), (5, "k1", None, 2, "D"),
+              (9, "k1", "c9b", 2, "U")],
+             [(1, "k2", "c1b", 3, "U")]]
+    for i, rows in enumerate(moves):
+        commit = pc.commit_merge if i == 0 else pc.commit_delta
+        commit(spark, spark.createDataFrame(
+                   rows, "doc_id long, bucket string, content string, "
+                         "lsn long, op string")
+               .select("*", F.to_timestamp(F.lit("2026-01-01")).alias("ts"),
+                       F.lit(i).alias("batch_id")), f"b{i}")
+    for buckets, want in (
+            (["k1", "k2", "zz"], {(9, "k1", "c9b", 2), (1, "k2", "c1b", 3),
+                                  (2, "k2", "c2", 1), (6, "k2", "c6", 1),
+                                  (10, "k2", "c10", 1)}),
+            (["k1"], {(9, "k1", "c9b", 2)})):
+        probe = spark.createDataFrame([(b,) for b in buckets],
+                                      "bucket string")
+        assert _lookup_both_ways(
+            spark, pc, probe,
+            lambda r: (r.doc_id, r.bucket, r.content, r._lsn),
+            monkeypatch) == [want] * 2, buckets

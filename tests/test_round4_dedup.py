@@ -431,34 +431,22 @@ def test_grouped_replay_timestamp_shaped_batch_ids(spark, tmp_path):
                 .select("repo", "path", "content").collect()})
 
 
-def test_dedup_tables_opens_legacy_layout(spark, tmp_path):
-    """Regression (round-4 review): a standing pipeline whose band table
-    predates the bucket layout (part_cols == key) must keep ingesting
-    after upgrade — dedup_tables opens the recorded layout, and the
-    probe skips pruning (which would be WRONG under the key layout)."""
-    from cdc.stream.dedup import dedup_tables, ingest_dedup_batch
+def test_dedup_tables_refuses_legacy_layout(spark, tmp_path):
+    """A band table partitioned by its key (the pre-bucket layout) cannot
+    serve the bucket probe: dedup_tables refuses it, naming the fix."""
+    from cdc.stream.dedup import dedup_tables
     from cdc.table.table import CdcTable
 
-    broot, groot = str(tmp_path / "b"), str(tmp_path / "g")
-    legacy_b = CdcTable(broot, key_cols=("doc_id", "band"),
-                        n_partitions=4, layout="key_hash")
-    legacy_g = CdcTable(groot, key_cols=("doc_id",), n_partitions=4,
-                        layout="key_hash")
-    ingest_dedup_batch(spark, legacy_b, legacy_g,
-                       _mk(spark, range(0, 15)), "e0")
-
-    bands, groups = dedup_tables(broot, groot, n_partitions=4)
-    assert bands.part_cols == ("doc_id", "band")   # recorded, not new
-    ingest_dedup_batch(spark, bands, groups, _mk(spark, range(100, 115)),
-                       "e1")
-    from cdc.cc import connected_components
-    from cdc.lsh import minhash_pairs
-    corpus = _mk(spark, list(range(0, 15)) + list(range(100, 115)))
-    oneshot = {(r.id, r.grp) for r in connected_components(
-        minhash_pairs(corpus), src="doc_a", dst="doc_b").collect()}
-    standing = {(r.doc_id, r.grp) for r in
-                groups.read(spark).select("doc_id", "grp").collect()}
-    assert standing == oneshot and oneshot
+    broot = str(tmp_path / "b")
+    legacy = CdcTable(broot, key_cols=("doc_id", "band"), n_partitions=4,
+                      layout="key_hash")
+    legacy.commit_merge(spark, spark.createDataFrame(
+        [(1, 0, "bk0", 1, "U")],
+        "doc_id long, band int, bucket string, lsn long, op string")
+        .withColumn("ts", F.timestamp_seconds(F.col("lsn")))
+        .withColumn("batch_id", F.lit("e0")), "e0")
+    with pytest.raises(ValueError, match="rebuild"):
+        dedup_tables(broot, str(tmp_path / "g"), n_partitions=4)
 
 
 @pytest.mark.slow
