@@ -11,11 +11,16 @@ Each version subdir is read with its registry schema and projected onto the
 latest schema (typed-null fill + widening casts) — this is the engine's
 read-path schema evolution, done *before* any shuffle.
 
-Scale: the ``lsn > checkpoint`` filter is a plain Catalyst predicate, so it
-pushes down to Parquet footer min/max stats: fully-applied files are
-skipped at the scan, which is what makes resuming a 10^10-event log from a
-late checkpoint O(new data), not O(log). Files are written lsn-sorted per
-range (gen.write_change_log) precisely to keep those footer ranges tight.
+Tail selection: a bounded read (``after_lsn >= 0`` or ``upto_lsn`` set)
+folds each file's footer ``lsn`` (min, max) on the driver and hands Spark
+only the files whose range meets ``(after_lsn, upto_lsn]``, plus any file
+without ``lsn`` stats — the superset rule of ``cdc.table.scan.plan_scan``.
+Spark then lists, plans and opens only those files: a tail commit over a
+long archive costs its own files, not the archive. The ``lsn`` filters
+stay on the frame, so rows are exact and the predicate still pushes down
+to the kept files' row groups. An unbounded read hands Spark the version
+dirs. Files are written lsn-sorted per range (gen.write_change_log) to
+keep the footer ranges tight.
 """
 
 from __future__ import annotations
@@ -38,18 +43,55 @@ def _version_dirs(log_dir: str) -> list[tuple[int, str]]:
     return out
 
 
+def _lsn_bounds(vdir: str) -> list[tuple[str, object, object]]:
+    """``(path, lsn min, lsn max)`` of each ``*.parquet`` file of one
+    version dir, from its footer alone; ``(None, None)`` when the file has
+    no ``lsn`` stats."""
+    import pyarrow.parquet as pq
+
+    from cdc.table.scan import footer_minmax
+
+    out = []
+    for name in sorted(os.listdir(vdir)):
+        if name.endswith(".parquet"):
+            full = os.path.join(vdir, name)
+            out.append((full, *footer_minmax(pq.read_metadata(full), "lsn")))
+    return out
+
+
 def read_log(spark: SparkSession, log_dir: str, registry: SchemaRegistry,
              after_lsn: int | None = None, upto_lsn: int | None = None) -> DataFrame:
-    """S2 — batch tail: all events with lsn in (after_lsn, upto_lsn]."""
+    """S2 — batch tail: all events with lsn in (after_lsn, upto_lsn].
+
+    A bounded read reads only the files whose footer ``lsn`` range meets
+    the bounds (module docstring); a version with no such file drops out,
+    and no file at all gives an empty frame of the latest schema. A
+    version that keeps every file is read as its dir."""
+    lo = after_lsn if after_lsn is not None and after_lsn >= 0 else None
     dfs = []
-    for version, path in _version_dirs(log_dir):
-        raw = spark.read.schema(registry.spark_schema(version)).parquet(path)
+    for version, vdir in _version_dirs(log_dir):
+        paths = [vdir]
+        if lo is not None or upto_lsn is not None:
+            files = _lsn_bounds(vdir)
+            paths = [p for p, fmin, fmax in files
+                     if fmin is None
+                     or ((lo is None or fmax > lo)
+                         and (upto_lsn is None or fmin <= upto_lsn))]
+            if not paths:
+                continue
+            if len(paths) == len(files):
+                # every file kept: the dir read is the same relation, and
+                # Spark lists more than 32 explicit paths with a job
+                paths = [vdir]
+        raw = spark.read.schema(registry.spark_schema(version)).parquet(*paths)
         dfs.append(registry.normalize_to_latest(raw))
+    if not dfs:
+        return spark.createDataFrame([], registry.latest_schema())
     df = dfs[0]
     for d in dfs[1:]:
         df = df.unionByName(d)
-    if after_lsn is not None and after_lsn >= 0:
-        df = df.filter(F.col("lsn") > after_lsn)
+    if lo is not None:
+        df = df.filter(F.col("lsn") > lo)
     if upto_lsn is not None:
         df = df.filter(F.col("lsn") <= upto_lsn)
     return df
@@ -85,26 +127,18 @@ def truncate_log(log_dir: str, below_lsn: int,
     twice, or crashing mid-sweep, loses nothing — replay correctness
     never depends on applied files still existing.
 
-    A file that STRADDLES the horizon is kept whole; the lsn pushdown
-    skips its applied rows at read time, so retention granularity costs
-    scan metadata, not correctness. At 10^10 events this is the piece
-    that keeps the binlog archive bounded by the reorder window instead
-    of growing forever."""
-    import pyarrow.parquet as pq
-
-    from cdc.table.scan import footer_minmax
-
+    A file that STRADDLES the horizon is kept whole; the tail selection
+    keeps the straddling file and the lsn filter drops its applied rows,
+    so retention granularity costs scan work, not correctness. At 10^10
+    events this is the piece that keeps the binlog archive bounded by the
+    reorder window instead of growing forever."""
     horizon = below_lsn - reorder_horizon
     removed: list[str] = []
     for _version, vdir in _version_dirs(log_dir):
-        for name in sorted(os.listdir(vdir)):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(vdir, name)
-            _, hi = footer_minmax(pq.ParquetFile(full).metadata, "lsn")
+        for full, _, hi in _lsn_bounds(vdir):
             if hi is not None and hi < horizon:
                 os.remove(full)
-                crc = os.path.join(vdir, f".{name}.crc")
+                crc = os.path.join(vdir, f".{os.path.basename(full)}.crc")
                 if os.path.exists(crc):
                     os.remove(crc)
                 removed.append(full)

@@ -14,7 +14,8 @@ each, the rules those readers share:
   partition reconciles base + deltas by row LWW or by the patch fold.
 
 It also holds the one parquet footer min/max reader (``footer_minmax``),
-used by commit stats, ``verify_table`` and log retention.
+used by commit stats, ``verify_table``, log retention and the log tail's
+file selection (``cdc.io.log``).
 """
 
 from __future__ import annotations

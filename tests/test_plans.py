@@ -41,6 +41,30 @@ def test_lsn_filter_pushes_to_parquet(spark, log_dir):
     assert "PushedFilters" in p and "GreaterThan(lsn,500)" in p, p[-2000:]
 
 
+def test_tail_read_plans_only_the_files_its_range_meets(spark, tmp_path):
+    """A tail read at the end of the archive hands Spark exactly the files
+    whose lsn range meets the bounds (read from the data, not the footer),
+    not every file of the archive."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "log")
+    ev = gen_change_events(spark, n_keys=200, mean_events_per_key=4, seed=31)
+    write_change_log(ev, d, events_per_file=50)
+    ranges = {}
+    for f in glob.glob(f"{d}/v=*/*.parquet"):
+        lsn = pq.read_table(f, columns=["lsn"]).column("lsn").to_pylist()
+        ranges[os.path.realpath(f)] = (min(lsn), max(lsn))
+    top = max(hi for _, hi in ranges.values())
+    after, upto = top - 120, top - 20
+    want = {f for f, (lo, hi) in ranges.items() if hi > after and lo <= upto}
+    df = read_log(spark, d, default_registry(), after_lsn=after, upto_lsn=upto)
+    got = {os.path.realpath(f.split(":", 1)[1]) for f in df.inputFiles()}
+    assert got == want and 0 < len(want) < len(ranges), (got, want)
+
+
 def test_metrics_never_reads_content(spark, log_dir):
     """Lineage metrics are a narrow-column job: the parquet ReadSchema must
     not contain the wide content column."""
