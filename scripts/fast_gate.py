@@ -14,6 +14,9 @@ from the host: at most one shard per 2 cores and per 6 GB of RAM, and
 the shards' heaps together take half of physical memory — the rest is
 JVM off-heap, Python workers and the tmpfs shuffle dir.
 
+Each shard reports its wall time and its 10 slowest tests (pytest
+``--durations=10``), so a run shows its margin against a time budget.
+
 Profiles:
   python scripts/fast_gate.py              # default profile (no `slow`)
   python scripts/fast_gate.py --full       # the pre-commit gate
@@ -28,6 +31,7 @@ import os
 import subprocess
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 # measured-heaviest files first (full-run --durations), so round-robin
 # seeding spreads them across shards; everything else is appended
@@ -82,19 +86,34 @@ def main() -> int:
         if not shard:
             continue
         cmd = [sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider",
-               f"--basetemp=/tmp/fastgate-{i}", *shard]
+               "--durations=10", f"--basetemp=/tmp/fastgate-{i}", *shard]
         if args.full:
             cmd += ["-m", "slow or not slow"]
         procs.append((i, shard, subprocess.Popen(
             cmd, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
             text=True, env=env)))
 
-    ok = True
-    for i, shard, p in procs:
+    def finish(p):
+        # one waiter thread per shard, so each wall time is its own
         out, _ = p.communicate()
-        tail = [ln for ln in out.splitlines() if ln.strip()][-1:]
+        return out, time.monotonic() - t0
+
+    with ThreadPoolExecutor(max(1, len(procs))) as pool:
+        done = list(pool.map(finish, [p for _, _, p in procs]))
+    ok = True
+    for (i, shard, p), (out, wall) in zip(procs, done):
+        lines = out.splitlines()
+        tail = [ln for ln in lines if ln.strip()][-1:]
         print(f"shard {i} ({len(shard)} files): rc={p.returncode} "
-              f"{tail[0] if tail else ''}", flush=True)
+              f"wall {wall:.1f}s {tail[0] if tail else ''}", flush=True)
+        # pytest's --durations section: its header, then one
+        # "<secs>s <phase> <test id>" line per test
+        start = next((n for n, ln in enumerate(lines)
+                      if "slowest" in ln and "durations" in ln), None)
+        for ln in lines[start + 1:] if start is not None else []:
+            if ln.split()[1:2] not in (["setup"], ["call"], ["teardown"]):
+                break
+            print(f"  {ln}")
         # rc 5 = "no tests collected" (e.g. every test in the shard is
         # deselected by the default profile's marker filter): not a failure
         if p.returncode not in (0, 5):

@@ -8,14 +8,17 @@ keys)`` with key_cols = (indexed column, *base keys) and layout
 the indexed VALUE, so an index probe manifest-prunes to one partition.
 
 Maintenance is incremental over the change feed (``images='both'``),
-exactly the IVM delta-rule with no measures: per (value, key) the signed
-row count nets pre/post images out, so an update that KEEPS the value
-emits nothing, an update that CHANGES it emits a tombstone under the old
-value and an upsert under the new one, and deletes retire their entry.
-The refresh is exactly-once via the index's own ledger (``idx-<from>-
-<to>`` keys = the checkpoint), identical to cdc.ivm; plug
-``index.maintainer(idx)`` into ``stream_to_table(downstream=[...])`` to
-advance the index in lock-step with ingest.
+exactly the IVM delta-rule with no measures (``ivm.signed_delta``): per
+(value, key) the signed row count nets pre/post images out, so an update
+that KEEPS the value emits nothing, an update that CHANGES it emits a
+tombstone under the old value and an upsert under the new one, and
+deletes retire their entry.
+The refresh is ``timetravel.refresh_from_feed``, shared with cdc.ivm
+and cdc.scd2: exactly-once via the index's own ledger (``idx-<from>-
+<to>`` range keys = the checkpoint); this module supplies only the
+initial and incremental batch builders. Plug ``index.maintainer(idx)``
+into ``stream_to_table(downstream=[...])`` to advance the index in
+lock-step with ingest.
 
 Cost model at scale: refresh is O(churned base partitions) for the feed +
 one small shuffle of the netted (value, key) deltas; a lookup is two
@@ -26,16 +29,14 @@ NULL values are not indexed (SQL index semantics: IS NULL scans).
 
 from __future__ import annotations
 
-from datetime import datetime
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc.ivm import signed_delta
 from cdc.table.table import CdcTable
-from cdc.table.timetravel import change_feed
+from cdc.table.timetravel import refresh_from_feed
 
 IDX_KEY_PREFIX = "idx-"
-_POSITIVE = ("insert", "update_postimage")
 
 
 def create_index(root: str, base: CdcTable, column: str,
@@ -50,54 +51,28 @@ def create_index(root: str, base: CdcTable, column: str,
                     n_partitions=n_partitions, layout="repo_hash")
 
 
-def synced_snapshot_id(idx: CdcTable) -> int:
-    snap = idx.current_snapshot()
-    hi = 0
-    for key in (snap["committed_batches"] if snap else []):
-        if key.startswith(IDX_KEY_PREFIX):
-            lo_s, _, hi_s = key[len(IDX_KEY_PREFIX):].partition("-")
-            if lo_s.isdigit() and hi_s.isdigit():
-                hi = max(hi, int(hi_s))
-    return hi
-
-
 def refresh(spark: SparkSession, base: CdcTable, idx: CdcTable) -> dict | None:
-    """Bring the index up to date with ``base``'s current snapshot.
+    """Bring the index up to date with ``base``'s current snapshot
+    (``timetravel.refresh_from_feed`` under ``idx-`` range keys).
     Returns the new index snapshot, or None when already current."""
     column = idx.key_cols[0]
-    bsnap = base.current_snapshot()
-    if bsnap is None:
-        return None
-    to_id = int(bsnap["snapshot_id"])
-    from_id = synced_snapshot_id(idx)
-    if from_id >= to_id:
-        return None
-
     keys = list(base.key_cols)
-    if from_id == 0:
-        batch = (base.read(spark)
-                 .filter(F.col(column).isNotNull())
-                 .select(column, *keys)
-                 .withColumn("op", F.lit("U")))
-    else:
-        feed = change_feed(spark, base, from_id, to_id, images="both")
-        sign = (F.when(F.col("_change_type").isin(*_POSITIVE), F.lit(1))
-                .otherwise(F.lit(-1)))
-        net = (feed.filter(F.col(column).isNotNull())
-               .groupBy(column, *keys)
-               .agg(F.sum(sign).alias("_net"))
-               .filter(F.col("_net") != 0))
-        batch = net.select(
-            column, *keys,
-            F.when(F.col("_net") > 0, "U").otherwise("D").alias("op"))
 
-    ts = datetime.fromisoformat(bsnap["committed_ts"]).replace(tzinfo=None)
-    batch = (batch
-             .withColumn("lsn", F.lit(to_id).cast("long"))
-             .withColumn("ts", F.lit(ts).cast("timestamp"))
-             .withColumn("batch_id", F.lit(to_id).cast("long")))
-    return idx.commit_merge(
-        spark, batch, f"{IDX_KEY_PREFIX}{from_id:08d}-{to_id:08d}")
+    def initial(live: DataFrame, _to: int) -> DataFrame:
+        return (live.filter(F.col(column).isNotNull())
+                .select(column, *keys)
+                .withColumn("op", F.lit("U")))
+
+    def incremental(feed: DataFrame, _to: int) -> DataFrame:
+        net = (signed_delta(feed.filter(F.col(column).isNotNull()),
+                            [column, *keys], {})
+               .filter(F.col("cnt") != 0))
+        return net.select(
+            column, *keys,
+            F.when(F.col("cnt") > 0, "U").otherwise("D").alias("op"))
+
+    return refresh_from_feed(spark, base, idx, IDX_KEY_PREFIX,
+                             initial, incremental)
 
 
 def maintainer(idx: CdcTable):

@@ -16,7 +16,9 @@ folds each file's footer ``lsn`` (min, max) on the driver and hands Spark
 only the files whose range meets ``(after_lsn, upto_lsn]``, plus any file
 without ``lsn`` stats — the superset rule of ``cdc.table.scan.plan_scan``.
 Spark then lists, plans and opens only those files: a tail commit over a
-long archive costs its own files, not the archive. The ``lsn`` filters
+long archive costs its own files, not the archive. A version that keeps
+more than 32 files is handed over as its dir instead, because Spark lists
+more explicit paths than that with a Spark job. The ``lsn`` filters
 stay on the frame, so rows are exact and the predicate still pushes down
 to the kept files' row groups. An unbounded read hands Spark the version
 dirs. Files are written lsn-sorted per range (gen.write_change_log) to
@@ -31,6 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc.schema.registry import SchemaRegistry
+
+
+# spark.sql.sources.parallelPartitionDiscovery.threshold's default: above
+# it, Spark lists a relation's paths with a Spark job
+_MAX_EXPLICIT_PATHS = 32
 
 
 def _version_dirs(log_dir: str) -> list[tuple[int, str]]:
@@ -66,7 +73,7 @@ def read_log(spark: SparkSession, log_dir: str, registry: SchemaRegistry,
     A bounded read reads only the files whose footer ``lsn`` range meets
     the bounds (module docstring); a version with no such file drops out,
     and no file at all gives an empty frame of the latest schema. A
-    version that keeps every file is read as its dir."""
+    version that keeps more than 32 files is read as its dir."""
     lo = after_lsn if after_lsn is not None and after_lsn >= 0 else None
     dfs = []
     for version, vdir in _version_dirs(log_dir):
@@ -79,9 +86,10 @@ def read_log(spark: SparkSession, log_dir: str, registry: SchemaRegistry,
                          and (upto_lsn is None or fmin <= upto_lsn))]
             if not paths:
                 continue
-            if len(paths) == len(files):
-                # every file kept: the dir read is the same relation, and
-                # Spark lists more than 32 explicit paths with a job
+            if len(paths) > _MAX_EXPLICIT_PATHS:
+                # Spark lists more explicit paths than this with a job;
+                # the dir lists on the driver, and the lsn filters drop
+                # the rows of the files the selection would have skipped
                 paths = [vdir]
         raw = spark.read.schema(registry.spark_schema(version)).parquet(*paths)
         dfs.append(registry.normalize_to_latest(raw))

@@ -22,19 +22,20 @@ Why this scales where recompute doesn't (SURVEY.md §2.B consumer side):
 - the MV commit is a normal transactional merge rewriting only touched
   MV partitions, and its ledger key ``ivm-<from>-<to>`` doubles as the
   refresh checkpoint: re-running a crashed refresh is a no-op (T7
-  exactly-once carried over to the view).
+  exactly-once carried over to the view). That protocol is
+  ``timetravel.refresh_from_feed``, shared with cdc.index and cdc.scd2;
+  this module supplies only the initial and incremental batch builders.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping
-from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc.table.table import CdcTable
-from cdc.table.timetravel import change_feed
+from cdc.table.timetravel import refresh_from_feed
 
 IVM_KEY_PREFIX = "ivm-"
 _POSITIVE = ("insert", "update_postimage")
@@ -64,21 +65,6 @@ def full_aggregate(rows: DataFrame, dims: list[str],
     return rows.groupBy(*dims).agg(*aggs)
 
 
-def synced_snapshot_id(mv: CdcTable) -> int:
-    """Highest base-table snapshot id a committed refresh has covered —
-    parsed from the MV's own commit ledger (``ivm-<from>-<to>`` keys), so
-    the checkpoint is transactional with the refresh itself. 0 = never
-    refreshed (base snapshot ids start at 1)."""
-    snap = mv.current_snapshot()
-    hi = 0
-    for key in (snap["committed_batches"] if snap else []):
-        if key.startswith(IVM_KEY_PREFIX):
-            lo_s, _, hi_s = key[len(IVM_KEY_PREFIX):].partition("-")
-            if lo_s.isdigit() and hi_s.isdigit():
-                hi = max(hi, int(hi_s))
-    return hi
-
-
 def maintainer(mv: CdcTable, measures: Mapping[str, Column]):
     """Adapter for ``stream_to_table(downstream=[...])``: refresh ``mv``
     after every ingest epoch (no-op when already current)."""
@@ -90,65 +76,44 @@ def maintainer(mv: CdcTable, measures: Mapping[str, Column]):
 def refresh(spark: SparkSession, base: CdcTable, mv: CdcTable,
             measures: Mapping[str, Column]) -> dict | None:
     """Bring ``mv`` up to date with ``base``'s current snapshot. Returns
-    the new MV snapshot, or None when already current / base is empty.
+    the new MV snapshot, or None when already current / base is empty
+    (``timetravel.refresh_from_feed`` under ``ivm-`` range keys).
 
     ``mv.key_cols`` are the grouping dimensions (must exist on base rows);
-    measure Columns are expressions over base-row columns. The MV rows'
-    ``_lsn`` is the covered base snapshot id — monotone per refresh, so
-    the merge's ``lsn >=`` guard makes replayed refreshes idempotent
-    row-by-row too."""
+    measure Columns are expressions over base-row columns."""
     if mv.layout != "key_hash":
         raise ValueError("IVM target table must use layout='key_hash' "
                          "(dims-hash partition pruning drives the refresh)")
     dims = list(mv.key_cols)
-    bsnap = base.current_snapshot()
-    if bsnap is None:
-        return None
-    to_id = int(bsnap["snapshot_id"])
-    from_id = synced_snapshot_id(mv)
-    if from_id >= to_id:
-        return None
+    names = ["cnt", *measures]
 
-    if from_id == 0:
-        new = full_aggregate(base.read(spark), dims, measures)
-        batch = new.withColumn("op", F.lit("U"))
-    else:
-        feed = change_feed(spark, base, from_id, to_id, images="both")
-        delta = signed_delta(feed, dims, measures)
+    def initial(live: DataFrame, _to: int) -> DataFrame:
+        return full_aggregate(live, dims, measures).withColumn("op", F.lit("U"))
+
+    def incremental(feed: DataFrame, _to: int) -> DataFrame:
         # net-zero groups (e.g. an update that left every measure intact)
         # would dirty MV partitions for nothing — drop them early
         nonzero = F.col("cnt") != 0
         for name in measures:
             nonzero = nonzero | ~F.col(name).eqNullSafe(F.lit(0) * F.col(name))
-        delta = delta.filter(nonzero).persist()
-        try:
-            # from_id > 0: the MV has a snapshot, so the point read is a frame
-            cur = mv.lookup_keys(spark, delta.select(*dims))
-            names = ["cnt", *measures]
-            joined = delta.select(
-                *dims, *[F.col(n).alias(f"_d_{n}") for n in names]
-            ).join(cur.select(
-                *dims, *[F.col(n).alias(f"_c_{n}") for n in names]),
-                dims, "left")
-            batch = joined.select(
-                *dims,
-                *[(F.coalesce(F.col(f"_c_{n}"), F.lit(0))
-                   + F.coalesce(F.col(f"_d_{n}"), F.lit(0))).alias(n)
-                  for n in names])
-            batch = batch.withColumn(
-                "op", F.when(F.col("cnt") <= 0, "D").otherwise("U"))
-            batch = batch.persist()
-            batch.count()   # materialize before delta unpersists
-        finally:
-            delta.unpersist()
+        # read twice: the MV point-read probe and the join below
+        delta = (signed_delta(feed, dims, measures).filter(nonzero)
+                 .localCheckpoint(eager=True))
+        # an incremental refresh follows a committed one, so the MV has a
+        # snapshot and the point read is a frame
+        cur = mv.lookup_keys(spark, delta.select(*dims))
+        joined = delta.select(
+            *dims, *[F.col(n).alias(f"_d_{n}") for n in names]
+        ).join(cur.select(
+            *dims, *[F.col(n).alias(f"_c_{n}") for n in names]),
+            dims, "left")
+        batch = joined.select(
+            *dims,
+            *[(F.coalesce(F.col(f"_c_{n}"), F.lit(0))
+               + F.coalesce(F.col(f"_d_{n}"), F.lit(0))).alias(n)
+              for n in names])
+        return batch.withColumn(
+            "op", F.when(F.col("cnt") <= 0, "D").otherwise("U"))
 
-    ts = datetime.fromisoformat(bsnap["committed_ts"]).replace(tzinfo=None)
-    batch = (batch.withColumn("lsn", F.lit(to_id).cast("long"))
-             .withColumn("ts", F.lit(ts).cast("timestamp"))
-             .withColumn("batch_id", F.lit(to_id).cast("long")))
-    key = f"{IVM_KEY_PREFIX}{from_id:08d}-{to_id:08d}"
-    try:
-        return mv.commit_merge(spark, batch, key)
-    finally:
-        if from_id != 0:
-            batch.unpersist()
+    return refresh_from_feed(spark, base, mv, IVM_KEY_PREFIX,
+                             initial, incremental)

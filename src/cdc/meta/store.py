@@ -603,6 +603,28 @@ def new_snapshot(
     return out
 
 
+def range_key(prefix: str, lo: int, hi: int) -> str:
+    """Ledger key of a commit that covers the source range ``lo``..``hi``:
+    ``<prefix><lo:08d>-<hi:08d>``. Grouped replay writes ``grp-`` keys
+    (producer batch ids); the feed-maintained tables write ``idx-``,
+    ``ivm-`` and ``scd2-`` keys (base snapshot ids). The key lands in
+    the same snapshot as the rows it covers, so it IS the checkpoint."""
+    return f"{prefix}{lo:08d}-{hi:08d}"
+
+
+def covered_hi(snap: dict[str, Any] | None, prefix: str) -> int | None:
+    """Highest ``hi`` among ``snap``'s ``range_key(prefix, …)`` ledger
+    keys; None when there is none. Only a well-formed key counts, so a
+    caller-chosen key that merely starts with the prefix is ignored."""
+    his = []
+    for key in (snap["committed_batches"] if snap else []):
+        if key.startswith(prefix):
+            lo, _, hi = key[len(prefix):].partition("-")
+            if lo.isdigit() and hi.isdigit():
+                his.append(int(hi))
+    return max(his, default=None)
+
+
 # -- multi-table atomic publish (cross-table transaction) -------------------
 
 TXN_INTENT = "_txn-intent.json"

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from cdc.dedup import last_writer_wins
 from cdc.io.log import read_log
+from cdc.meta import store
 from cdc.metrics import batch_lineage_metrics, write_batch_metrics
 from cdc.schema.normalize import normalize_content
 from cdc.schema.registry import SchemaRegistry, default_registry
@@ -134,7 +135,6 @@ def apply_batch(
             live = (final.filter(F.col("op") != "D")
                     if "op" in final.columns else final)
             quality.enforce(live, checks)
-        from cdc.meta.store import CommitConflictError
         attempt = 0
         while True:
             try:
@@ -152,7 +152,7 @@ def apply_batch(
                 else:
                     snap = table.commit_merge(spark, final, batch_key)
                 break
-            except CommitConflictError:
+            except store.CommitConflictError:
                 if attempt >= conflict_retries:
                     raise
                 attempt += 1  # commit re-reads state; retry recomputes
@@ -169,27 +169,10 @@ def apply_batch(
     return snap
 
 
-GROUP_KEY_PREFIX = "grp-"   # RESERVED ledger namespace for grouped commits:
-                            # only keys replay() itself wrote are parsed as
-                            # batch high-water marks — a caller-chosen
-                            # apply_batch key can never masquerade as one.
-
-
-def _group_key(lo: int, hi: int) -> str:
-    return f"{GROUP_KEY_PREFIX}{lo:08d}-{hi:08d}"
-
-
-def _committed_batch_hi(table: CdcTable) -> int:
-    """Highest producer batch_id covered by a committed replay GROUP
-    (ledger keys ``grp-<lo>-<hi>``); -1 when no grouped commit exists."""
-    snap = table.current_snapshot()
-    hi = -1
-    for key in (snap["committed_batches"] if snap else []):
-        if key.startswith(GROUP_KEY_PREFIX):
-            lo_s, _, hi_s = key[len(GROUP_KEY_PREFIX):].partition("-")
-            if lo_s.isdigit() and hi_s.isdigit():
-                hi = max(hi, int(hi_s))
-    return hi
+# RESERVED ledger namespace for grouped commits (``store.range_key``):
+# the resume reads only these keys as batch high-water marks, so a
+# caller-chosen apply_batch key outside it never masquerades as one.
+GROUP_KEY_PREFIX = "grp-"
 
 
 def _has_full_tail_commit(table: CdcTable) -> bool:
@@ -251,9 +234,9 @@ def replay(
             res.n_commits += 1
             res.batch_keys.append(key)
     else:
-        bhi = _committed_batch_hi(table)
+        bhi = store.covered_hi(table.current_snapshot(), GROUP_KEY_PREFIX)
         log = read_log(spark, log_dir, registry)
-        if bhi >= 0:
+        if bhi is not None:
             # batch-scoped resume (see docstring): pushes to footers because
             # write_change_log files are contiguous in batch_id too.
             log = log.filter(F.col("batch_id") > bhi)
@@ -310,7 +293,7 @@ def replay(
             groups = []
         for g in groups:
             lo, hi = int(g["lo"]), int(g["hi"])
-            key = _group_key(lo, hi)
+            key = store.range_key(GROUP_KEY_PREFIX, lo, hi)
             if table.is_committed(key):
                 res.n_skipped += 1
                 continue

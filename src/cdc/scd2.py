@@ -16,19 +16,19 @@ Refresh cost is O(churn), never O(history):
   reads the first key column alone, so a base-key probe (a prefix of the
   history key) routes to the partitions holding those entities;
 - the commit is a normal transactional merge (ledger key
-  ``scd2-<from>-<to>`` = the refresh checkpoint, same exactly-once story
-  as cdc.ivm).
+  ``scd2-<from>-<to>`` = the refresh checkpoint): the refresh is
+  ``timetravel.refresh_from_feed``, shared with cdc.index and cdc.ivm,
+  and this module supplies only the initial and incremental batch
+  builders.
 """
 
 from __future__ import annotations
 
-from datetime import datetime
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc.table.table import CdcTable
-from cdc.table.timetravel import change_feed
+from cdc.table.table import PART_COL, CdcTable
+from cdc.table.timetravel import refresh_from_feed
 
 SCD2_KEY_PREFIX = "scd2-"
 _OPENS = ("insert", "update_postimage")
@@ -46,24 +46,6 @@ def history_table(root: str, base: CdcTable, n_partitions: int | None = None) ->
                     layout="repo_hash")
 
 
-def synced_snapshot_id(hist: CdcTable) -> int:
-    snap = hist.current_snapshot()
-    hi = 0
-    for key in (snap["committed_batches"] if snap else []):
-        if key.startswith(SCD2_KEY_PREFIX):
-            lo_s, _, hi_s = key[len(SCD2_KEY_PREFIX):].partition("-")
-            if lo_s.isdigit() and hi_s.isdigit():
-                hi = max(hi, int(hi_s))
-    return hi
-
-
-def _value_cols(base_snap: dict, keys: tuple) -> list[str]:
-    import pyspark.sql.types as T
-    fields = T.StructType.fromDDL(base_snap["schema_ddl"])
-    return [f.name for f in fields.fields
-            if f.name not in keys and not f.name.startswith("_")]
-
-
 def maintainer(hist: CdcTable):
     """Adapter for ``stream_to_table(downstream=[...])``: advance the
     history after every ingest epoch (no-op when already current)."""
@@ -74,69 +56,45 @@ def maintainer(hist: CdcTable):
 
 def refresh_history(spark: SparkSession, base: CdcTable,
                     hist: CdcTable) -> dict | None:
-    """Advance ``hist`` to cover base's current snapshot. Returns the new
-    history snapshot, or None when already current / base is empty."""
+    """Advance ``hist`` to cover base's current snapshot
+    (``timetravel.refresh_from_feed`` under ``scd2-`` range keys). Returns
+    the new history snapshot, or None when already current / base is
+    empty."""
     if hist.layout != "repo_hash":
         raise ValueError("history table must use layout='repo_hash' "
                          "(retirement probes prune on the first key column)")
     if hist.key_cols[:-1] != base.key_cols or hist.key_cols[-1] != "valid_from_snap":
         raise ValueError("history key must be base key + ('valid_from_snap',)")
     keys = list(base.key_cols)
-    bsnap = base.current_snapshot()
-    if bsnap is None:
-        return None
-    to_id = int(bsnap["snapshot_id"])
-    from_id = synced_snapshot_id(hist)
-    if from_id >= to_id:
-        return None
-    vals = _value_cols(bsnap, base.key_cols)
 
-    if from_id == 0:
-        live = base.read(spark)
-        opens = live.select(*keys, *vals, F.col("_lsn").alias("row_lsn"))
-        closes = None
-    else:
-        feed = change_feed(spark, base, from_id, to_id, images="both").persist()
-        try:
-            opens = (feed.filter(F.col("_change_type").isin(*_OPENS))
-                     .select(*keys, *vals, F.col("_lsn").alias("row_lsn")))
-            cur = hist.lookup_keys(spark, feed.filter(
-                F.col("_change_type").isin(*_CLOSES)).select(*keys))
-            if cur is not None:
-                closes = (cur.filter(F.col("valid_to_snap").isNull())
-                          .select(*keys, "valid_from_snap", *vals, "row_lsn")
-                          .withColumn("valid_to_snap", F.lit(to_id).cast("long")))
-            else:
-                closes = None
-            # materialize both legs before the feed cache is released
-            opens = opens.persist()
-            opens.count()
-            if closes is not None:
-                closes = closes.persist()
-                closes.count()
-        finally:
-            feed.unpersist()
+    def opened(rows: DataFrame, to_id: int) -> DataFrame:
+        """Versions opened at ``to_id``: the key, then every value column
+        (base's, in its schema order)."""
+        vals = [c for c in rows.columns if c not in keys
+                and c != PART_COL and not c.startswith("_")]
+        return rows.select(
+            *keys, F.lit(to_id).cast("long").alias("valid_from_snap"),
+            *vals, F.col("_lsn").alias("row_lsn"),
+            F.lit(None).cast("long").alias("valid_to_snap"))
 
-    batch = opens.withColumn("valid_from_snap", F.lit(to_id).cast("long")) \
-                 .withColumn("valid_to_snap", F.lit(None).cast("long"))
-    batch = batch.select(*keys, "valid_from_snap", *vals, "row_lsn", "valid_to_snap")
-    if closes is not None:
-        batch = batch.unionByName(
-            closes.select(*keys, "valid_from_snap", *vals, "row_lsn", "valid_to_snap"))
+    def initial(live: DataFrame, to_id: int) -> DataFrame:
+        return opened(live, to_id).withColumn("op", F.lit("U"))
 
-    ts = datetime.fromisoformat(bsnap["committed_ts"]).replace(tzinfo=None)
-    batch = (batch.withColumn("op", F.lit("U"))
-             .withColumn("lsn", F.lit(to_id).cast("long"))
-             .withColumn("ts", F.lit(ts).cast("timestamp"))
-             .withColumn("batch_id", F.lit(to_id).cast("long")))
-    key = f"{SCD2_KEY_PREFIX}{from_id:08d}-{to_id:08d}"
-    try:
-        return hist.commit_merge(spark, batch, key)
-    finally:
-        if from_id != 0:
-            opens.unpersist()
-            if closes is not None:
-                closes.unpersist()
+    def incremental(feed: DataFrame, to_id: int) -> DataFrame:
+        # read twice: the retirement probe and the new versions
+        feed = feed.localCheckpoint(eager=True)
+        batch = opened(feed.filter(F.col("_change_type").isin(*_OPENS)), to_id)
+        # an incremental refresh follows a committed one, so the history
+        # has a snapshot and the point read is a frame
+        closes = (hist.lookup_keys(spark, feed.filter(
+                      F.col("_change_type").isin(*_CLOSES)).select(*keys))
+                  .filter(F.col("valid_to_snap").isNull())
+                  .withColumn("valid_to_snap", F.lit(to_id).cast("long")))
+        return (batch.unionByName(closes.select(*batch.columns))
+                .withColumn("op", F.lit("U")))
+
+    return refresh_from_feed(spark, base, hist, SCD2_KEY_PREFIX,
+                             initial, incremental)
 
 
 def current_versions(spark: SparkSession, hist: CdcTable) -> DataFrame:

@@ -71,45 +71,6 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 _SYS_SUFFIX = "_commit_snapshot long"
 
 
-def _arrow_schema(ddl: str):
-    """Arrow schema for a flat Spark DDL string — parsed WITHOUT a
-    SparkContext (DataSource readers run in session-less Python workers).
-    Types are the exact arrow forms Spark's batch conversion expects
-    (timestamps: us, UTC). Flat schemas only — this engine's table DDLs
-    never nest."""
-    import pyarrow as pa
-
-    simple = {
-        "string": pa.string(), "bigint": pa.int64(), "long": pa.int64(),
-        "int": pa.int32(), "integer": pa.int32(), "smallint": pa.int16(),
-        "tinyint": pa.int8(), "double": pa.float64(), "float": pa.float32(),
-        "real": pa.float32(), "boolean": pa.bool_(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-        "date": pa.date32(), "binary": pa.binary(),
-    }
-    fields, depth, buf = [], 0, []
-    for ch in ddl + ",":
-        if ch == "," and depth == 0:
-            part = "".join(buf).strip()
-            buf = []
-            if not part:
-                continue
-            name, _, typ = part.partition(" ")
-            typ = typ.strip().lower()
-            if typ.startswith("decimal"):
-                p, s = typ[typ.index("(") + 1:typ.index(")")].split(",")
-                at = pa.decimal128(int(p), int(s))
-            else:
-                at = simple[typ]
-            fields.append(pa.field(name, at, nullable=True))
-        else:
-            depth += ch in "(<"
-            depth -= ch in ")>"
-            buf.append(ch)
-    return pa.schema(fields)
-
-
 def _aligned(path: str, colmap: list, fields: list):
     """Read one data file and select, rename, pad and cast it to
     ``fields`` (schema evolution: ``colmap`` — ``scan.column_map`` —
@@ -318,15 +279,17 @@ class CdcTableDataSource(DataSource):
 
     def reader(self, schema) -> "CdcBatchReader":
         if str(self.options.get("pushdown", "false")).lower() == "true":
-            return CdcPushdownBatchReader(self._root(), self.options)
-        return CdcBatchReader(self._root(), self.options)
+            return CdcPushdownBatchReader(self._root(), self.options, schema)
+        return CdcBatchReader(self._root(), self.options, schema)
 
     def streamReader(self, schema) -> "CdcStreamReader":
-        return CdcStreamReader(self._root(), self.options)
+        return CdcStreamReader(self._root(), self.options, schema)
 
 
 class CdcBatchReader(DataSourceReader):
-    def __init__(self, root: str, options):
+    def __init__(self, root: str, options, schema):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from cdc.meta import store
 
         sid = options.get("snapshot_id")
@@ -335,8 +298,9 @@ class CdcBatchReader(DataSourceReader):
         self._root = root
         self._include_deleted = str(
             options.get("include_deleted", "false")).lower() == "true"
-        self._target = _arrow_schema(
-            f"{self._snap['schema_ddl']}, {_SYS_SUFFIX}")
+        # the arrow forms Spark's batch conversion expects (timestamps: us,
+        # UTC; nested types too), from the schema Spark resolved
+        self._target = to_arrow_schema(schema)
         self._bounds: dict[str, list] = {}
 
     def partitions(self):
@@ -350,14 +314,7 @@ class CdcBatchReader(DataSourceReader):
             # MOR reconcile is file-local ONLY when the partition function
             # is a pure function of the key (all this engine's layouts hash
             # key columns) — which needs the recorded key columns
-            cfg = self._snap.get("table_config")
-            if not cfg or not cfg.get("key_cols"):
-                raise ValueError(
-                    "snapshot has MOR delta layers but records no "
-                    "table_config (pre-config history) — the cdctable "
-                    "source cannot reconcile without key columns; compact "
-                    "first or read via CdcTable.read")
-            key_cols = tuple(cfg["key_cols"])
+            key_cols = tuple(self._snap["table_config"]["key_cols"])
         ids = self._snap["column_ids"]
         return [InputPartition((
                     t.reconcile,
@@ -432,7 +389,9 @@ class CdcStreamReader(DataSourceStreamReader):
     has shown the reader its checkpointed position, is uncapped —
     correctness never depends on the cap, it only paces progress."""
 
-    def __init__(self, root: str, options):
+    def __init__(self, root: str, options, schema):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self._root = root
         self._start = str(options.get("start", "earliest")).lower()
         cap = options.get("maxSnapshotsPerTrigger") or options.get(
@@ -443,8 +402,7 @@ class CdcStreamReader(DataSourceStreamReader):
         if snap is None:
             raise ValueError(f"no snapshot at {root} — stream after the "
                              f"first commit")
-        self._target = _arrow_schema(
-            f"{snap['schema_ddl']}, {_SYS_SUFFIX}")
+        self._target = to_arrow_schema(schema)
         # feed rows are emitted under the stream's init-time schema; files
         # written before a rename resolve to it by field id
         self._cur_ids = snap["column_ids"]

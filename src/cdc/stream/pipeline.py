@@ -84,12 +84,14 @@ def stream_to_table(
     available_now).
 
     ``downstream`` — callables ``(spark, table) -> Any`` invoked after
-    every epoch, e.g. ``cdc.ivm.maintainer(mv, measures)`` or
-    ``cdc.scd2.maintainer(hist)``: derived tables then advance in
-    lock-step with the ingest. They run even for re-delivered epochs —
-    each maintainer checkpoints on the BASE snapshot id in its own commit
-    ledger, so a crash between the table commit and a refresh heals on
-    restart, and an already-current refresh is a no-op.
+    every epoch, e.g. ``cdc.ivm.maintainer(mv, measures)``,
+    ``cdc.scd2.maintainer(hist)`` or ``cdc.index.maintainer(idx)``:
+    derived tables then advance in lock-step with the ingest. They run
+    even for re-delivered epochs — all three refresh through
+    ``cdc.table.timetravel.refresh_from_feed``, which checkpoints on the
+    BASE snapshot id in the derived table's own commit ledger, so a crash
+    between the table commit and a refresh heals on restart, and an
+    already-current refresh is a no-op.
     """
     src = stream_events(spark, log_dir, registry, watermark, max_files_per_trigger)
     checkpoint = checkpoint_dir or os.path.join(table.root, "_checkpoints", "tail")

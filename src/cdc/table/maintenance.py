@@ -185,9 +185,7 @@ def rollback(table: CdcTable, to_snapshot_id: int) -> dict:
     # rolling back across a repartition must restore that spec too, or
     # pruning/lookups against the restored files silently break. Re-open
     # the handle (CdcTable.open) after rolling back across a spec change.
-    cfg = target.get("table_config", parent.get("table_config"))
-    if cfg:
-        snap["table_config"] = cfg
+    snap["table_config"] = target["table_config"]
     store.write_snapshot(table.root, snap,
                          expected_parent=parent["snapshot_id"])
     return snap
@@ -213,7 +211,7 @@ def repartition(spark: SparkSession, table: CdcTable,
         n_partitions=n_partitions or table.n_partitions,
         layout=layout or table.layout,
         files_per_partition=files_per_partition or table.files_per_partition,
-        bloom_filters=table.bloom_filters)
+        part_cols=table.part_cols)
     df = (table.read(spark, include_deleted=True)
           .withColumn(PART_COL, new.part_of()))   # re-derive under NEW spec
     sid = store.next_snapshot_id(table.root)

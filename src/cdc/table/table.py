@@ -151,10 +151,8 @@ class CdcTable:
 
     def __init__(self, root: str, key_cols: Sequence[str] = ("repo", "path"),
                  n_partitions: int = 16, files_per_partition: int = 1,
-                 layout: str = "repo_hash", bloom_filters: bool | None = None,
-                 stats_cols: Sequence[str] = (),
-                 part_cols: Sequence[str] | None = None,
-                 enforce_part_cols: bool = True):
+                 layout: str = "repo_hash", stats_cols: Sequence[str] = (),
+                 part_cols: Sequence[str] | None = None):
         """``layout``:
         - 'repo_hash' — part = pmod(xxhash64(repo), P): partition pruning
           by repo; the committer repartitions on (part, file_group).
@@ -180,17 +178,17 @@ class CdcTable:
         repartition on the partition id (upstream LWW clustering is by
         key, which no longer equals the partition function).
 
-        ``enforce_part_cols`` (part-override tables only) — commit-time
-        guard: refuse a batch that carries one key under two different
-        partition values, or a live row with a NULL part column (folded
-        into commit_merge's existing pre-aggregate; one narrow agg job in
-        commit_delta). The CROSS-commit form of the violation — a live
-        key already standing in a partition this batch doesn't touch —
-        is undetectable at commit time by construction (the partition
-        function cannot be inverted to find the old row), so the
-        sanctioned way to MOVE a key is retire-then-insert (a tombstone
-        carrying the OLD part values, then the new row: see
-        cdc.stream.dedup.apply_doc_changes / cdc.ann.IvfIndex), and
+        Part-override tables have a commit-time guard: it refuses a batch
+        that carries one key under two different partition values, or a
+        live row with a NULL part column (folded into commit_merge's
+        existing pre-aggregate; one narrow agg job in commit_delta). The
+        CROSS-commit form of the violation — a live key already standing
+        in a partition this batch doesn't touch — is undetectable at
+        commit time by construction (the partition function cannot be
+        inverted to find the old row), so the sanctioned way to MOVE a
+        key is retire-then-insert (a tombstone carrying the OLD part
+        values, then the new row: see cdc.stream.dedup.apply_doc_changes
+        / cdc.ann.IvfIndex), and
         ``maintenance.verify_table(check_data=True)`` is the offline
         detector for tables corrupted before the guard existed."""
         self.root = root
@@ -201,17 +199,11 @@ class CdcTable:
         if layout not in ("repo_hash", "key_hash"):
             raise ValueError(f"unknown layout {layout!r}")
         self.layout = layout
-        if bloom_filters is None:
-            # env override so spark-submit jobs can A/B without code changes
-            bloom_filters = os.environ.get("CDC_BLOOM_FILTERS", "1") != "0"
-        self.bloom_filters = bloom_filters
         # extra manifest min/max stats per data file (Iceberg data-skipping
         # analog): a write-time preference, NOT layout identity — readers
         # opened without it just see (and prune on) whatever the writer
         # recorded. Columns absent from a frame are skipped silently.
         self.stats_cols = tuple(stats_cols)
-        # write-time preference (like bloom_filters), not layout identity
-        self.enforce_part_cols = enforce_part_cols
         # writer-unique staging suffix: concurrent writers (or a CAS-retry
         # racing another committer) can hold the SAME next snapshot id —
         # without this, both would stage into one deterministic dir and
@@ -288,11 +280,9 @@ class CdcTable:
                 "part_cols": list(self.part_cols)}
 
     def _check_config(self, parent: dict | None) -> None:
-        cfg = (parent or {}).get("table_config")
-        if not cfg:
+        if parent is None:
             return
-        # snapshots predating the part_cols seam partitioned by the key
-        cfg = {**cfg, "part_cols": cfg.get("part_cols", cfg["key_cols"])}
+        cfg = parent["table_config"]
         ours = self.table_config()
         for k in ("key_cols", "n_partitions", "layout", "part_cols"):
             if cfg[k] != ours[k]:
@@ -307,21 +297,16 @@ class CdcTable:
         """Open an existing table with the partition spec its snapshots
         record — the safe way to get a handle without repeating (and
         possibly mistyping) the creation parameters. ``overrides`` pass
-        through non-identity knobs (e.g. ``bloom_filters``)."""
+        through non-identity knobs (e.g. ``stats_cols``)."""
         snap = store.read_current(root)
         if snap is None:
             raise ValueError(f"no table at {root}")
-        cfg = snap.get("table_config")
-        if cfg is None:
-            raise ValueError(
-                f"snapshot at {root} predates recorded table config — "
-                f"construct CdcTable(...) with the original parameters "
-                f"(the next commit records them)")
+        cfg = snap["table_config"]
         return cls(root, key_cols=tuple(cfg["key_cols"]),
                    n_partitions=int(cfg["n_partitions"]),
                    layout=cfg["layout"],
-                   files_per_partition=int(cfg.get("files_per_partition", 1)),
-                   part_cols=tuple(cfg.get("part_cols") or cfg["key_cols"]),
+                   files_per_partition=int(cfg["files_per_partition"]),
+                   part_cols=tuple(cfg["part_cols"]),
                    **overrides)
 
     # -- metadata ------------------------------------------------------------
@@ -729,14 +714,12 @@ class CdcTable:
         # skip row groups whose sorted-key min/max straddles the probe but
         # whose bloom filter rules it out — cheap at write time, O(row
         # groups hit) instead of O(partition) at read time.
-        bloom = {}
-        if self.bloom_filters:
-            bloom = {f"parquet.bloom.filter.enabled#{c}": "true"
-                     for c in self.key_cols}
-            # cap the per-column filter at 128 KiB/row-group (default 1 MiB):
-            # a higher false-positive rate only costs a wasted row-group read
-            # on some lookups, while write amplification is paid every commit
-            bloom["parquet.bloom.filter.max.bytes"] = str(128 * 1024)
+        bloom = {f"parquet.bloom.filter.enabled#{c}": "true"
+                 for c in self.key_cols}
+        # cap the per-column filter at 128 KiB/row-group (default 1 MiB):
+        # a higher false-positive rate only costs a wasted row-group read
+        # on some lookups, while write amplification is paid every commit
+        bloom["parquet.bloom.filter.max.bytes"] = str(128 * 1024)
         if cluster_by:
             # range clustering: contiguous (part, cluster_by) ranges per
             # task -> near-disjoint per-file stats within each partition.
@@ -862,7 +845,7 @@ class CdcTable:
                     f"compact before committing {delta_image}-image deltas")
 
         beyond = self._part_beyond_key()
-        if beyond and self.enforce_part_cols:
+        if beyond:
             # MOR commits have no other pre-write action to fold into —
             # one narrow agg over the (small) batch is the guard's price
             row = (batch_final.withColumn(PART_COL, self.part_of())
@@ -930,8 +913,7 @@ class CdcTable:
 
         batch = batch_final.withColumn(PART_COL, self.part_of())
         beyond = self._part_beyond_key()
-        guard = (self._part_guard_aggs()
-                 if beyond and self.enforce_part_cols else [])
+        guard = self._part_guard_aggs() if beyond else []
         agg = batch.agg(F.max("lsn").alias("h"),
                         F.collect_set(PART_COL).alias("parts"),
                         *guard).collect()[0]

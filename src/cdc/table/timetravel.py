@@ -14,8 +14,13 @@ the commit cadence (events per commit), not the log size.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from cdc.meta import store
 
 from cdc.dedup import last_writer_wins
 from cdc.merge import merge_apply
@@ -104,8 +109,6 @@ def changed_parts(table: CdcTable, from_id: int, to_id: int) -> list[int]:
     file sets, so a partition with an identical file list in both
     snapshots provably holds identical rows — the change-feed join skips
     it entirely (metadata-only pruning, no data read)."""
-    from cdc.meta import store
-
     by_part: list[dict[int, set[str]]] = []
     for sid in (from_id, to_id):
         snap = store.read_snapshot(table.root, sid)
@@ -170,6 +173,49 @@ def change_feed(spark: SparkSession, table: CdcTable,
                     "_change_type",
                     F.lit(from_id).alias("_from_snapshot"),
                     F.lit(to_id).alias("_to_snapshot")))
+
+
+def refresh_from_feed(spark: SparkSession, base: CdcTable, target: CdcTable,
+                      prefix: str,
+                      initial: Callable[[DataFrame, int], DataFrame],
+                      incremental: Callable[[DataFrame, int], DataFrame]
+                      ) -> dict | None:
+    """The one refresh of a table derived from ``base`` (cdc.index,
+    cdc.ivm, cdc.scd2): advance ``target`` to base's current snapshot
+    ``to`` and return the new target snapshot, or None when base is empty
+    or ``target`` is already current.
+
+    The checkpoint is ``target``'s own ledger: the highest covered base
+    snapshot id ``from`` among its ``prefix`` range keys (0 = never
+    refreshed; base snapshot ids start at 1). The batch is
+    ``initial(live rows of to, to)`` when ``from == 0``, else
+    ``incremental(feed, to)`` over the ``images='both'`` change feed
+    ``(from, to]``; a builder emits the target's columns and ``op``. The
+    incremental batch is materialized once (``localCheckpoint``): the
+    merge reads it twice. Every row gets ``lsn`` = ``batch_id`` = ``to``,
+    monotone per refresh, so the merge's ``lsn >=`` guard keeps a
+    replayed refresh idempotent row by row, and ``ts`` = base's commit
+    time. The merge commits under ``range_key(prefix, from, to)``, so a
+    crash before the commit re-runs the window and a re-run after it is
+    a ledger no-op."""
+    bsnap = base.current_snapshot()
+    if bsnap is None:
+        return None
+    to_id = int(bsnap["snapshot_id"])
+    from_id = store.covered_hi(target.current_snapshot(), prefix) or 0
+    if from_id >= to_id:
+        return None
+    if from_id == 0:
+        batch = initial(base.read(spark, snapshot_id=to_id), to_id)
+    else:
+        feed = change_feed(spark, base, from_id, to_id, images="both")
+        batch = incremental(feed, to_id).localCheckpoint(eager=True)
+    ts = datetime.fromisoformat(bsnap["committed_ts"]).replace(tzinfo=None)
+    batch = (batch.withColumn("lsn", F.lit(to_id).cast("long"))
+             .withColumn("ts", F.lit(ts).cast("timestamp"))
+             .withColumn("batch_id", F.lit(to_id).cast("long")))
+    return target.commit_merge(spark, batch,
+                               store.range_key(prefix, from_id, to_id))
 
 
 def _change_feed_images(a: DataFrame, b: DataFrame, keys: list[str],

@@ -12,6 +12,12 @@ from cdc.spark_source import CdcStreamReader, CdcTableDataSource
 from cdc.table.table import CdcTable
 
 
+def _schema(root):
+    """The StructType Spark hands ``reader``/``streamReader``."""
+    from pyspark.sql.types import StructType
+    return StructType.fromDDL(CdcTableDataSource({"root": root}).schema())
+
+
 def ev(spark, rows, batch_id=0):
     """rows: (repo, path, lsn, content, op)"""
     return (spark.createDataFrame(
@@ -105,12 +111,13 @@ def test_stream_reader_offset_ranges(spark, table):
     """Driver-side offset algebra without a streaming query: partitions
     between two snapshot-id offsets cover exactly the commits in the
     range, and each partition's rows carry that commit's new lsns."""
-    r = CdcStreamReader(table.root, {"root": table.root})
+    r = CdcStreamReader(table.root, {"root": table.root},
+                        _schema(table.root))
     assert r.initialOffset() == {"snapshot_id": 0}
     assert r.latestOffset() == {"snapshot_id": 3}
     assert CdcStreamReader(
-        table.root, {"root": table.root,
-                     "start": "latest"}).initialOffset() == {"snapshot_id": 3}
+        table.root, {"root": table.root, "start": "latest"},
+        _schema(table.root)).initialOffset() == {"snapshot_id": 3}
     parts = r.partitions({"snapshot_id": 1}, {"snapshot_id": 3})
     sids = {p.value[2] for p in parts}
     assert sids == {2, 3}
@@ -133,7 +140,8 @@ def test_stream_reader_offset_ranges(spark, table):
 def test_stream_start_at_snapshot_id(spark, table):
     """start=<snapshot id> begins the tail AFTER that snapshot (the
     startingVersion analog); bogus ids fail loudly."""
-    r = CdcStreamReader(table.root, {"root": table.root, "start": "2"})
+    r = CdcStreamReader(table.root, {"root": table.root, "start": "2"},
+                        _schema(table.root))
     assert r.initialOffset() == {"snapshot_id": 2}
     parts = r.partitions(r.initialOffset(), r.latestOffset())
     rows = [row for p in parts for b in r.read(p) for row in b.to_pylist()]
@@ -141,10 +149,12 @@ def test_stream_start_at_snapshot_id(spark, table):
         [("r2", "b", 9)]                        # only commit 3's change
     with pytest.raises(ValueError, match="does not exist"):
         CdcStreamReader(table.root,
-                        {"root": table.root, "start": "99"}).initialOffset()
+                        {"root": table.root, "start": "99"},
+                        _schema(table.root)).initialOffset()
     with pytest.raises(ValueError, match="start must be"):
         CdcStreamReader(table.root,
-                        {"root": table.root, "start": "bogus"}).initialOffset()
+                        {"root": table.root, "start": "bogus"},
+                        _schema(table.root)).initialOffset()
 
 
 def test_stream_backpressure_caps_commits_per_trigger(spark, table):
@@ -152,7 +162,8 @@ def test_stream_backpressure_caps_commits_per_trigger(spark, table):
     most N commits past the last observed offset, landing on REAL chain
     snapshot ids (walked via parent links, not id arithmetic)."""
     r = CdcStreamReader(table.root,
-                        {"root": table.root, "maxSnapshotsPerTrigger": "1"})
+                        {"root": table.root, "maxSnapshotsPerTrigger": "1"},
+                        _schema(table.root))
     assert r.initialOffset() == {"snapshot_id": 0}
     assert r.latestOffset() == {"snapshot_id": 1}      # capped, not 3
     parts = r.partitions({"snapshot_id": 0}, {"snapshot_id": 1})
@@ -165,7 +176,8 @@ def test_stream_backpressure_caps_commits_per_trigger(spark, table):
     assert r.latestOffset() == {"snapshot_id": 3}      # caught up: no-op
     # cap of 2 jumps two commits at a time
     r2 = CdcStreamReader(table.root,
-                         {"root": table.root, "maxSnapshotsPerTrigger": "2"})
+                         {"root": table.root, "maxSnapshotsPerTrigger": "2"},
+                         _schema(table.root))
     r2.initialOffset()
     assert r2.latestOffset() == {"snapshot_id": 2}
 
@@ -227,13 +239,13 @@ def test_batch_pushdown_prunes_files(spark, tmp_path):
     from cdc.table.maintenance import compact
     compact(spark, t, files_per_partition=4, cluster_by=["score"])
 
-    r = CdcPushdownBatchReader(t.root, {"root": t.root})
+    r = CdcPushdownBatchReader(t.root, {"root": t.root}, _schema(t.root))
     n_all = len(r.partitions())
     leftover = list(r.pushFilters([GreaterThanOrEqual(("score",), 14.0)]))
     assert len(leftover) == 1          # exact predicate stays with Spark
     assert len(r.partitions()) < n_all
 
-    r2 = CdcPushdownBatchReader(t.root, {"root": t.root})
+    r2 = CdcPushdownBatchReader(t.root, {"root": t.root}, _schema(t.root))
     list(r2.pushFilters([EqualTo(("_lsn",), 1)]))
     assert len(r2.partitions()) <= n_all
 
@@ -316,7 +328,7 @@ def test_stream_tail_equals_change_feed(spark, tmp_path, ops):
     expected = {(r.repo, r.path): (r._change_type, r._content_sha256)
                 for r in feed.collect()}
 
-    r = CdcStreamReader(t.root, {"root": t.root})
+    r = CdcStreamReader(t.root, {"root": t.root}, _schema(t.root))
     rows = [row for p in r.partitions({"snapshot_id": from_id},
                                       {"snapshot_id": to_id})
             for b in r.read(p) for row in b.to_pylist()]
@@ -394,3 +406,32 @@ def test_patch_replication_via_stream_source(spark, tmp_path):
     # the epoch-2 tail row for (r1, a) carried content NULL; patch
     # replication preserved the epoch-1 content
     assert got[("r1", "a")] == ("v1", "fr", 5)
+
+
+def test_array_column_table_reads_through_source(spark, tmp_path):
+    """A table with a nested column (``array<double>``) reads through the
+    source, batch and stream, exactly as ``CdcTable.read`` reads it: the
+    Arrow schema comes from the StructType Spark resolved."""
+    spark.dataSource.register(CdcTableDataSource)
+    t = CdcTable(str(tmp_path / "vec"), key_cols=("vec_id",),
+                 n_partitions=2, layout="key_hash")
+    rows = [(1, [0.5, -1.0], 1, "U"), (2, [2.25], 2, "U"), (3, [], 3, "U")]
+    batch = (spark.createDataFrame(
+                 rows, "vec_id long, embedding array<double>, lsn long, "
+                       "op string")
+             .withColumn("ts", F.timestamp_seconds(F.col("lsn")))
+             .withColumn("batch_id", F.lit(0).cast("long")))
+    t.commit_merge(spark, batch, "b0")
+
+    def vecs(df):
+        return sorted((r.vec_id, tuple(r.embedding)) for r in df.collect())
+
+    want = vecs(t.read(spark))
+    assert want == [(1, (0.5, -1.0)), (2, (2.25,)), (3, ())]
+    got = spark.read.format("cdctable").option("root", t.root).load()
+    assert vecs(got) == want
+    q = (spark.readStream.format("cdctable").option("root", t.root).load()
+         .writeStream.format("memory").queryName("cdc_vec_feed")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert vecs(spark.sql("select * from cdc_vec_feed")) == want

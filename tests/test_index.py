@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc import index
+from cdc.meta import store
 from cdc.pipeline import apply_batch
 from cdc.table.table import CdcTable
 
@@ -61,7 +62,8 @@ def test_secondary_index_lifecycle(spark, tmp_path):
 
     # checkpoint is the index's own ledger — survives re-open
     reopened = CdcTable.open(idx.root)
-    assert index.synced_snapshot_id(reopened) == \
+    assert store.covered_hi(reopened.current_snapshot(),
+                            index.IDX_KEY_PREFIX) == \
         base.current_snapshot()["snapshot_id"]
 
     # indexing a key column is refused
@@ -145,7 +147,8 @@ def test_index_maintainer_streams_in_lockstep(spark, tmp_path):
                     max_files_per_trigger=1,
                     downstream=[index.maintainer(idx)])
     assert len(base.snapshots()) > 1, "expected multiple epochs"
-    assert index.synced_snapshot_id(idx) == \
+    assert store.covered_hi(idx.current_snapshot(),
+                            index.IDX_KEY_PREFIX) == \
         base.current_snapshot()["snapshot_id"]
     want = {(r.lang, r.repo, r.path) for r in
             base.read(spark).filter("lang IS NOT NULL")

@@ -6,7 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cdc.ivm import full_aggregate, refresh, synced_snapshot_id
+from cdc.ivm import IVM_KEY_PREFIX, full_aggregate, refresh
+from cdc.meta import store
 from cdc.pipeline import replay
 from cdc.table.table import CdcTable
 from cdc.table.timetravel import change_feed, changed_parts
@@ -47,7 +48,8 @@ def test_initial_load_then_incremental_matches_recompute(spark, env, tmp_path):
                   layout="key_hash")
     snap = refresh(spark, base, mv, MEASURES())
     assert snap is not None
-    assert synced_snapshot_id(mv) == base.current_snapshot()["snapshot_id"]
+    assert store.covered_hi(mv.current_snapshot(), IVM_KEY_PREFIX) == \
+        base.current_snapshot()["snapshot_id"]
     assert mv_rows(spark, mv) == recompute(spark, base)
     # already current -> no-op
     assert refresh(spark, base, mv, MEASURES()) is None

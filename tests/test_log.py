@@ -107,3 +107,25 @@ def test_selection_keeping_no_file_is_the_empty_latest_schema(
         got = _check(spark, d, after, upto)
         assert got.inputFiles() == [], (after, upto)
         assert got.count() == 0
+
+
+def test_long_selection_builds_without_a_listing_job(spark, tmp_path):
+    """A bounded read that keeps more than 32 files of one version reads
+    that version as its dir: building the frame launches no Spark job
+    (Spark lists more than 32 explicit paths with one), and the rows
+    still equal the dir-read reference."""
+    d = str(tmp_path / "long")
+    os.makedirs(f"{d}/v=1")
+    for i in range(40):
+        _write(f"{d}/v=1/f{i:02d}.parquet", 1, [2 * i, 2 * i + 1], True)
+    sc = spark.sparkContext
+    group = "test_log.listing"
+    sc.setJobGroup(group, group)
+    try:
+        # after_lsn=13 keeps files 7..39: 33 files
+        read_log(spark, d, default_registry(), after_lsn=13, upto_lsn=200)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    _check(spark, d, 13, 200)

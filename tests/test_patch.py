@@ -227,8 +227,11 @@ def test_patch_and_row_deltas_never_mix(spark, tmp_path):
     compact(spark, t)
     apply_batch(spark, t, ev(spark, [("r2", "b", 3, "w1", None, "U")]),
                 "b2", normalize=False, metrics=False, mode="mor")
-    from cdc.spark_source import CdcBatchReader
-    assert CdcBatchReader(t.root, {"root": t.root}).partitions()
+    from pyspark.sql.types import StructType
+
+    from cdc.spark_source import CdcBatchReader, CdcTableDataSource
+    schema = StructType.fromDDL(CdcTableDataSource({"root": t.root}).schema())
+    assert CdcBatchReader(t.root, {"root": t.root}, schema).partitions()
 
 
 def test_patch_mor_reads_through_datasource(spark, tmp_path):

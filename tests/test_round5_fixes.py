@@ -260,12 +260,11 @@ def test_tombstone_keeps_part_cols_and_mor_retires(spark, tmp_path):
 
 def test_verify_table_detects_cross_commit_move(spark, tmp_path):
     """The cross-commit contract violation (same key live in two
-    partitions — committed past the guard with enforcement off) must be
-    caught by verify_table's data tier."""
+    partitions — two one-row commits, each of which the in-batch guard
+    passes) must be caught by verify_table's data tier."""
     from cdc.table.maintenance import verify_table
-    from cdc.table.table import CdcTable
 
-    t = _bands_table(tmp_path, enforce_part_cols=False)
+    t = _bands_table(tmp_path)
     # find two buckets hashing to DIFFERENT partitions for the same key
     probe = spark.createDataFrame(
         [(1, 0, f"bk{i}") for i in range(20)],
@@ -281,10 +280,11 @@ def test_verify_table_detects_cross_commit_move(spark, tmp_path):
     res = verify_table(spark, t, check_data=True)
     assert not res["ok"]
     assert any("more than one partition" in e for e in res["errors"])
-    # the same handle with enforcement on would have refused... (in-batch
-    # form; the cross-commit form is exactly why this check exists)
-    strict = CdcTable.open(t.root)
-    assert strict.enforce_part_cols
+    # the guard refuses only the in-batch form (both buckets in one
+    # batch); the cross-commit form is exactly why this check exists
+    with pytest.raises(ValueError, match="two different partition values"):
+        t.commit_merge(spark, _band_batch(spark, [(3, 0, b1, 3, "U"),
+                                                  (3, 0, b2, 3, "U")]), "b2")
 
 
 # -- honest PPM resize (VERDICT r4 next-round #5) -------------------------------

@@ -147,6 +147,7 @@ def test_stream_with_downstream_maintainers(spark, log_dir, tmp_path):
     with the streaming ingest via the downstream hook, stay consistent
     with a from-scratch recompute, and survive a restart untouched."""
     from cdc import ivm, scd2
+    from cdc.meta import store
 
     table = CdcTable(str(tmp_path / "t3"), n_partitions=4, layout="key_hash")
     mv = CdcTable(str(tmp_path / "mv"), key_cols=("repo",), n_partitions=4,
@@ -159,7 +160,8 @@ def test_stream_with_downstream_maintainers(spark, log_dir, tmp_path):
                                 scd2.maintainer(hist)])
     assert len(table.snapshots()) > 1, "expected multiple epochs"
     # the MV covers the final base snapshot and matches recompute
-    assert ivm.synced_snapshot_id(mv) == table.current_snapshot()["snapshot_id"]
+    assert store.covered_hi(mv.current_snapshot(), ivm.IVM_KEY_PREFIX) == \
+        table.current_snapshot()["snapshot_id"]
     got = {(r.repo, r.cnt, r.sum_len) for r in
            mv.read(spark).select("repo", "cnt", "sum_len").collect()}
     want = {(r.repo, r.cnt, r.sum_len) for r in

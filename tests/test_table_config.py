@@ -88,6 +88,27 @@ def test_repartition_evolves_spec_and_rollback_restores_it(spark, tmp_path):
     assert o.lookup(spark, repo="r1", path="d").collect()[0].content == "y1"
 
 
+def test_repartition_keeps_part_cols_override(spark, tmp_path):
+    """A table partitioned by non-key columns keeps that override across
+    a repartition: the reopened handle has the same ``part_cols`` and a
+    bucket-only probe still routes to the rows."""
+    t = CdcTable(str(tmp_path / "bands"), key_cols=("doc_id", "band"),
+                 n_partitions=4, layout="key_hash",
+                 part_cols=("band", "bucket"))
+    rows = [(1, 0, "bk1", 1, "U"), (2, 0, "bk1", 2, "U"),
+            (3, 1, "bk2", 3, "U")]
+    t.commit_merge(spark, spark.createDataFrame(
+        rows, "doc_id long, band int, bucket string, lsn long, op string")
+        .withColumn("ts", F.timestamp_seconds(F.col("lsn")))
+        .withColumn("batch_id", F.lit(0).cast("long")), "b0")
+    t2 = repartition(spark, t, n_partitions=8)
+    assert t2.part_cols == ("band", "bucket")
+    assert CdcTable.open(t.root).part_cols == ("band", "bucket")
+    probe = spark.createDataFrame([(0, "bk1")], "band int, bucket string")
+    got = CdcTable.open(t.root).lookup_keys(spark, probe)
+    assert sorted(r.doc_id for r in got.collect()) == [1, 2]
+
+
 def test_tags_pin_snapshots_and_survive_expiry(spark, tmp_path):
     from cdc.meta import store
     from cdc.table.maintenance import expire_snapshots
