@@ -33,22 +33,26 @@ import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-# measured-heaviest files first (full-run --durations), so round-robin
-# seeding spreads them across shards; everything else is appended
-# alphabetically — deterministic, new files just join the rotation
+# measured-heaviest files first (single-process tier-1 run with
+# --durations=0, summed per file), ordered so that dealing them
+# round-robin over 2 shards, with every other file appended alphabetically
+# after them, splits the measured time evenly (a 4-core host runs 2
+# shards); new files just join the rotation
 HEAVY = [
-    "tests/test_streaming.py",
-    "tests/test_round4_dedup.py",
-    "tests/test_round5_dedup_cdc.py",
-    "tests/test_datasource.py",
-    "tests/test_ann.py",
     "tests/test_table_replay.py",
-    "tests/test_patch.py",
-    "tests/test_index.py",
+    "tests/test_batch_profile.py",
     "tests/test_alter.py",
-    "tests/test_ops_modules.py",
-    "tests/test_parity.py",
+    "tests/test_round4_dedup.py",
+    "tests/test_streaming.py",
+    "tests/test_ann.py",
+    "tests/test_table_config.py",
     "tests/test_wap.py",
+    "tests/test_round5_fixes.py",
+    "tests/test_parity.py",
+    "tests/test_ops_modules.py",
+    "tests/test_patch.py",
+    "tests/test_datasource.py",
+    "tests/test_round5_dedup_cdc.py",
 ]
 
 

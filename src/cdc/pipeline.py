@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from cdc.dedup import last_writer_wins
 from cdc.io.log import read_log
 from cdc.meta import store
-from cdc.metrics import batch_lineage_metrics, write_batch_metrics
+from cdc.metrics import ProfileMetrics, write_batch_metrics
 from cdc.schema.normalize import normalize_content
 from cdc.schema.registry import SchemaRegistry, default_registry
 from cdc.skew import batch_profile, plan_lww
@@ -77,11 +77,16 @@ def apply_batch(
     content column then never shuffles — the default-replay scaling win),
     'salted' for hot keys beyond the task budget, else 'maxby'.
 
-    Batch profile: ONE narrow ``groupBy(part)`` action over the raw batch
-    (key columns and ts; parquet column pruning keeps the wide content
-    column unread — ``cdc.skew.batch_profile``) feeds the resume guard,
-    the skew planner and the lineage metrics' late-row watermark. It runs
-    only when one of them consumes it."""
+    Batch profile: the commit's ONE pre-pass, a narrow ``groupBy(part)``
+    action over the raw batch (parquet column pruning keeps the wide
+    content column unread — ``cdc.skew.batch_profile``). It feeds the
+    resume guard and the skew planner and, with ``metrics``, carries every
+    lineage counter (the metrics file is built from its P rows on the
+    driver; only parts whose ts spread exceeds ``LATE_SECONDS`` pay a
+    late-row count) and ``commit_merge``'s plan (touched parts, max lsn).
+    It runs only when one of them consumes it. The collapsed batch is
+    cached only when two actions read it: CHECK constraints, conflict
+    retries, a part-override guard, or a CoW merge with no plan."""
     if image not in ("full", "patch"):
         raise ValueError(f"unknown image kind {image!r}")
     if table.is_committed(batch_key):
@@ -90,10 +95,10 @@ def apply_batch(
     # resume-path guard: a fully-applied tail must not commit an empty
     # snapshot on a non-empty table (a fresh table needs no probe)
     resuming = table.lsn_high() >= 0
-    plan = image == "full" and lww_via == "auto"
+    lww_plan = image == "full" and lww_via == "auto"
     profile = None
-    if plan or metrics:
-        profile = batch_profile(events, table.part_of(), max_ts=metrics)
+    if lww_plan or metrics:
+        profile = batch_profile(events, table.part_of(), counters=metrics)
         if resuming and profile["n_events"] == 0:
             return table.current_snapshot()
     elif resuming and events.isEmpty():
@@ -105,7 +110,7 @@ def apply_batch(
         final = collapse_patches(events, keys=table.key_cols)
     else:
         salt = 32
-        if plan:
+        if lww_plan:
             lww_via, salt = plan_lww(events, profile=profile)
         # No standalone dedup pass: verbatim at-least-once re-deliveries are
         # identical rows, so they collapse inside the LWW max_by / row_number
@@ -118,19 +123,27 @@ def apply_batch(
         # the full event stream cuts the Arrow/pandas traffic by the
         # events-per-key factor (~10x at bench scale).
         final = final.withColumn("content", normalize_content(F.col("content")))
-    # the collapsed batch is consumed twice inside commit (planning agg +
-    # merge/write) — cache it so the log scan -> dedup -> LWW chain runs once.
-    final = final.persist()
+    # CHECK constraints (alter.set_check): evaluate every declared
+    # predicate over the batch's winner rows in ONE aggregate pass and
+    # refuse the commit on any violation — nothing lands, no ledger
+    # entry, replaying the corrected batch under the same key works.
+    # Tombstones are exempt (a delete row carries no payload to check).
+    props = (table.current_snapshot() or {}).get("properties") or {}
+    checks = {k[len("check."):]: F.expr(v) for k, v in props.items()
+              if k.startswith("check.")} if image == "full" else {}
+    # commit_merge's plan: the profile's touched parts and max lsn
+    merge_plan = ((list(profile["parts"]), profile["lsn_high"])
+                  if metrics else None)
+    # cache the collapsed batch (so the log scan -> LWW chain runs once)
+    # only when a second action reads it: the CHECK pass, a retried
+    # commit, the part-override guard, or a merge planning aggregate
+    reads_twice = bool(checks or conflict_retries > 0
+                       or table._part_beyond_key()
+                       or (mode == "cow" and merge_plan is None))
+    if reads_twice:
+        final = final.persist()
     try:
-        # CHECK constraints (alter.set_check): evaluate every declared
-        # predicate over the batch's winner rows in ONE aggregate pass and
-        # refuse the commit on any violation — nothing lands, no ledger
-        # entry, replaying the corrected batch under the same key works.
-        # Tombstones are exempt (a delete row carries no payload to check).
-        props = (table.current_snapshot() or {}).get("properties") or {}
-        checks = {k[len("check."):]: F.expr(v) for k, v in props.items()
-                  if k.startswith("check.")}
-        if checks and image == "full":
+        if checks:
             from cdc import quality
             live = (final.filter(F.col("op") != "D")
                     if "op" in final.columns else final)
@@ -148,24 +161,24 @@ def apply_batch(
                 elif image == "patch":
                     from cdc.patch import merge_patches
                     snap = table.commit_merge(spark, final, batch_key,
-                                              apply_fn=merge_patches)
+                                              apply_fn=merge_patches,
+                                              plan=merge_plan)
                 else:
-                    snap = table.commit_merge(spark, final, batch_key)
+                    snap = table.commit_merge(spark, final, batch_key,
+                                              plan=merge_plan)
                 break
             except store.CommitConflictError:
                 if attempt >= conflict_retries:
                     raise
                 attempt += 1  # commit re-reads state; retry recomputes
         if metrics:
-            # exact_dedup=False: the dedup counter uses a map-side HLL
-            # sketch so the metrics job never shuffles the batch (see
-            # cdc.metrics) — the exact form stays available for audits.
-            m = batch_lineage_metrics(events.withColumn("part", table.part_of()),
-                                      exact_dedup=False,
-                                      max_ts_us=profile["max_ts_us"])
+            # the counters came with the profile; write_batch_metrics runs
+            # the late-row count only for parts spanning > LATE_SECONDS
+            m = ProfileMetrics(events, table.part_of(), profile["parts"])
             write_batch_metrics(m, table.root, batch_key, wall_ms=int((time.monotonic() - t0) * 1000))
     finally:
-        final.unpersist()
+        if reads_twice:
+            final.unpersist()
     return snap
 
 

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cdc.metrics import counter_aggs
+
 
 def topk_hot_keys(events: DataFrame, keys=("repo",), k: int = 20) -> DataFrame:
     """O3 — heaviest keys by event count (TakeOrderedAndProject: map-side
@@ -173,31 +175,37 @@ def skew_stats(events: DataFrame, keys=("repo", "path")) -> dict:
 
 
 def batch_profile(events: DataFrame, part, keys=("repo", "path"),
-                  max_ts: bool = True) -> dict:
+                  counters: bool = True) -> dict:
     """A commit's one narrow pre-pass over the raw batch: one
-    ``groupBy(part)`` over the key columns and ``ts``, collected to the
-    driver as P rows. It yields the row count (the resume guard's
-    emptiness probe), a distinct-key HLL and the key width (the LWW
-    planner), and, with ``max_ts``, the per-part max ``ts`` (the lineage
-    metrics' late-row watermark). A key never spans two partitions, so
-    the per-part HLL estimates add up. ``ts`` travels as epoch micros: no
+    ``groupBy(part)`` over the key columns (and, with ``counters``, the
+    lineage columns batch_id, lsn, ts, op), collected to the driver as P
+    rows. It yields the row count (the resume guard's emptiness probe), a
+    distinct-key HLL and the key width (the LWW planner) and, with
+    ``counters``, every lineage counter per part (``cdc.metrics
+    .counter_aggs``: the metrics file and its late-row rule) plus the
+    batch's touched parts and max lsn (``CdcTable.commit_merge``'s plan:
+    ``part`` is a pure function of the key, and each key's LWW winner
+    carries that key's max lsn). A key never spans two partitions, so the
+    per-part HLL estimates add up. ``ts`` travels as epoch micros: no
     naive-datetime round trip through ``collect``.
 
     Returns ``skew_stats``' shape minus the exact hottest key (the
-    profile never groups by key), plus ``max_ts_us`` (part -> micros;
-    empty unless ``max_ts``)."""
-    aggs = [F.count(F.lit(1)).alias("n_raw"),
-            F.approx_count_distinct(F.struct(*keys)).alias("n_keys"),
+    profile never groups by key), plus ``parts`` (part -> that part's
+    row as a dict) and, with ``counters``, ``lsn_high`` (None for an
+    empty batch)."""
+    aggs = [F.approx_count_distinct(F.struct(*keys)).alias("n_keys"),
             F.sum(F.length(F.concat_ws("", *keys))).alias("key_bytes")]
-    if max_ts:
-        aggs.append(F.max(F.unix_micros("ts")).alias("max_ts_us"))
+    aggs += counter_aggs() if counters else [F.count(F.lit(1)).alias("n_raw")]
     rows = events.groupBy(part.alias("part")).agg(*aggs).collect()
     n_raw = sum(r["n_raw"] for r in rows)
     key_bytes = sum(r["key_bytes"] or 0 for r in rows)
-    return {"n_keys": sum(r["n_keys"] for r in rows), "n_events": n_raw,
-            "avg_key_bytes": key_bytes / n_raw if n_raw else 0.0,
-            "max_ts_us": {r["part"]: r["max_ts_us"] for r in rows}
-            if max_ts else {}}
+    out = {"n_keys": sum(r["n_keys"] for r in rows), "n_events": n_raw,
+           "avg_key_bytes": key_bytes / n_raw if n_raw else 0.0,
+           "parts": {r["part"]: r.asDict() for r in rows}}
+    if counters:
+        out["lsn_high"] = max((r["lsn_high"] for r in rows
+                               if r["lsn_high"] is not None), default=None)
+    return out
 
 
 def choose_salt(stats: dict, target_rows_per_task: int = 100_000,

@@ -545,32 +545,28 @@ def apply_doc_changes(spark: SparkSession, bands: CdcTable,
         index.refresh(spark, groups, members)
 
 
-def continuous_dedup_changes(spark: SparkSession, changes_stream: DataFrame,
-                             bands: CdcTable, groups: CdcTable,
-                             checkpoint_dir: str | None = None,
-                             available_now: bool = True,
-                             processing_time: str | None = None,
-                             await_termination: bool = True,
-                             family: DedupFamily = MINHASH,
-                             fetch_docs=None,
-                             members: CdcTable | None = None,
-                             mode: str = "cow"):
-    """``continuous_dedup`` for an OP-TYPED change stream
-    ``(id, op, payload, payload_pre)`` — inserts, updates AND deletes
-    flow through the standing dedup state (``apply_doc_changes`` is the
-    foreachBatch body; same exactly-once ledger keys, same checkpoint
-    conventions)."""
-    checkpoint = checkpoint_dir or os.path.join(groups.root,
-                                                "_checkpoints", "dedup_cdc")
+def _run_epochs(spark: SparkSession, stream: DataFrame, checkpoint: str,
+                prefix: str, body, tables: tuple[CdcTable, ...],
+                compact_every: int | None, available_now: bool,
+                processing_time: str | None, await_termination: bool):
+    """The foreachBatch loop both stream entry points share. Epoch k runs
+    ``body(batch_df, key)`` under ledger key
+    ``<prefix>-<token>-epoch-<k>``: epoch_id is stable per checkpoint but
+    not globally unique, so the key is scoped by a token of the
+    checkpoint location (same convention as stream_to_table). After every
+    ``compact_every``-th epoch the ``tables`` are compacted, folding a MOR
+    stream's delta layers. Returns the StreamingQuery."""
     token = hashlib.sha256(
         os.path.abspath(checkpoint).encode()).hexdigest()[:10]
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"dedupc-{token}-epoch-{epoch_id:010d}"
-        apply_doc_changes(spark, bands, groups, batch_df, key, family,
-                          fetch_docs=fetch_docs, members=members, mode=mode)
+        body(batch_df, f"{prefix}-{token}-epoch-{epoch_id:010d}")
+        if compact_every and epoch_id % compact_every == compact_every - 1:
+            from cdc.table.maintenance import compact
+            for t in tables:
+                compact(spark, t)
 
-    w = (changes_stream.writeStream.foreachBatch(handle)
+    w = (stream.writeStream.foreachBatch(handle)
          .option("checkpointLocation", checkpoint)
          .outputMode("update"))
     if available_now:
@@ -581,6 +577,33 @@ def continuous_dedup_changes(spark: SparkSession, changes_stream: DataFrame,
     if await_termination and available_now:
         q.awaitTermination()
     return q
+
+
+def continuous_dedup_changes(spark: SparkSession, changes_stream: DataFrame,
+                             bands: CdcTable, groups: CdcTable,
+                             checkpoint_dir: str | None = None,
+                             available_now: bool = True,
+                             processing_time: str | None = None,
+                             await_termination: bool = True,
+                             family: DedupFamily = MINHASH,
+                             fetch_docs=None,
+                             members: CdcTable | None = None,
+                             mode: str = "cow",
+                             compact_every: int | None = None):
+    """``continuous_dedup`` for an OP-TYPED change stream
+    ``(id, op, payload, payload_pre)`` — inserts, updates AND deletes
+    flow through the standing dedup state (``apply_doc_changes`` is the
+    foreachBatch body; same exactly-once ledger keys, same checkpoint
+    conventions, same ``compact_every`` cadence)."""
+    checkpoint = checkpoint_dir or os.path.join(groups.root,
+                                                "_checkpoints", "dedup_cdc")
+    return _run_epochs(
+        spark, changes_stream, checkpoint, "dedupc",
+        lambda df, key: apply_doc_changes(
+            spark, bands, groups, df, key, family, fetch_docs=fetch_docs,
+            members=members, mode=mode),
+        (bands, groups), compact_every, available_now, processing_time,
+        await_termination)
 
 
 def continuous_dedup(spark: SparkSession, docs_stream: DataFrame,
@@ -594,33 +617,15 @@ def continuous_dedup(spark: SparkSession, docs_stream: DataFrame,
                      compact_every: int | None = None):
     """Run continuous dedup over a streaming (doc_id, text) — or
     (vec_id, embedding) — source. ``available_now=True`` drains the
-    source and stops (bounded backfill); otherwise a live tail. Returns
-    the StreamingQuery."""
+    source and stops (bounded backfill); otherwise a live tail.
+    ``compact_every=k`` compacts the bands and groups tables after every
+    k-th epoch (a MOR stream's delta layers otherwise grow without
+    bound). Returns the StreamingQuery."""
     checkpoint = checkpoint_dir or os.path.join(groups.root,
                                                 "_checkpoints", "dedup")
-    # epoch_id is stable per checkpoint but not globally unique — scope
-    # the ledger key by a token of the checkpoint location (same
-    # convention as stream_to_table).
-    token = hashlib.sha256(
-        os.path.abspath(checkpoint).encode()).hexdigest()[:10]
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        key = f"dedup-{token}-epoch-{epoch_id:010d}"
-        ingest_dedup_batch(spark, bands, groups, batch_df, key, family,
-                           mode)
-        if compact_every and epoch_id % compact_every == compact_every - 1:
-            from cdc.table.maintenance import compact
-            compact(spark, bands)
-            compact(spark, groups)
-
-    w = (docs_stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("update"))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)
-    q = w.start()
-    if await_termination and available_now:
-        q.awaitTermination()
-    return q
+    return _run_epochs(
+        spark, docs_stream, checkpoint, "dedup",
+        lambda df, key: ingest_dedup_batch(spark, bands, groups, df, key,
+                                           family, mode),
+        (bands, groups), compact_every, available_now, processing_time,
+        await_termination)

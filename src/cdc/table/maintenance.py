@@ -112,11 +112,16 @@ def compact(spark: SparkSession, table: CdcTable,
             df = df.repartition(
                 table.n_partitions * table.files_per_partition,
                 *table.key_cols)
-        entries, ddl = table._write_data(df.persist(), sid,
+        elif cluster_by:
+            # read twice: the range-sampling job (and z-order's bounds
+            # pass), then the write; a plain compaction reads it once
+            df = df.persist()
+        entries, ddl = table._write_data(df, sid,
                                          cluster_by=tuple(cluster_by or ()),
                                          zorder=zorder)
     finally:
-        df.unpersist()
+        if cluster_by:
+            df.unpersist()
         table.files_per_partition = old_fpp
         table.stats_cols = old_stats
 

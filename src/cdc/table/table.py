@@ -890,7 +890,9 @@ class CdcTable:
 
     def commit_merge(self, spark: SparkSession, batch_final: DataFrame,
                      batch_key: str, ref: str = store.CURRENT,
-                     apply_fn=None, onto: dict | None = None) -> dict:
+                     apply_fn=None, onto: dict | None = None,
+                     plan: tuple[list[int], int | None] | None = None
+                     ) -> dict:
         """MERGE-apply one LWW-collapsed batch and commit a new snapshot.
 
         Exactly-once: if ``batch_key`` is already in the ledger this is a
@@ -904,25 +906,34 @@ class CdcTable:
         current one (branch staging: chaining commits under a named
         ``ref``). The CAS then guards the BRANCH BASE — the main-line
         snapshot the chain forked from — so any main-line advance
-        invalidates the whole chain at publish/commit time."""
+        invalidates the whole chain at publish/commit time.
+
+        ``plan`` — ``(touched parts, batch max lsn)`` when the caller
+        already holds them (``cdc.pipeline.apply_batch`` reads them off
+        its batch profile): the merge then reads ``batch_final`` once.
+        Without it, or on a part-override table (whose guard aggregate
+        runs anyway), one planning aggregate over the batch derives them
+        first."""
         batch_key = str(batch_key)
         parent = onto if onto is not None else self.current_snapshot()
         if parent and batch_key in parent["committed_batches"]:
             return parent
         self._check_config(parent)
 
-        batch = batch_final.withColumn(PART_COL, self.part_of())
         beyond = self._part_beyond_key()
-        guard = self._part_guard_aggs() if beyond else []
-        agg = batch.agg(F.max("lsn").alias("h"),
-                        F.collect_set(PART_COL).alias("parts"),
-                        *guard).collect()[0]
-        if guard:
-            self._check_part_guard(agg)
-        if agg["h"] is None:  # empty batch; -1 = the empty-table lsn sentinel
-            touched, batch_lsn_high = [], (parent["lsn_high"] if parent else -1)
-        else:
-            touched, batch_lsn_high = sorted(agg["parts"]), int(agg["h"])
+        if plan is None or beyond:
+            guard = self._part_guard_aggs() if beyond else []
+            agg = (batch_final.withColumn(PART_COL, self.part_of())
+                   .agg(F.max("lsn").alias("h"),
+                        F.collect_set(PART_COL).alias("parts"), *guard)
+                   .collect()[0])
+            if guard:
+                self._check_part_guard(agg)
+            plan = ([], None) if agg["h"] is None else (agg["parts"], agg["h"])
+        touched, h = sorted(plan[0]), plan[1]
+        # empty batch: -1 = the empty-table lsn sentinel
+        batch_lsn_high = (int(h) if h is not None
+                          else (parent["lsn_high"] if parent else -1))
 
         state = self.read(spark, parts=touched, include_deleted=True,
                           snapshot_id=(parent["snapshot_id"]

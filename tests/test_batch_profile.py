@@ -37,8 +37,7 @@ class LayerJobs:
 
     LAYERS = {
         "skew": [(pipeline, "plan_lww")],
-        "metrics": [(pipeline, "batch_lineage_metrics"),
-                    (pipeline, "write_batch_metrics")],
+        "metrics": [(pipeline, "write_batch_metrics")],
         "table.commit_merge": [(CdcTable, "commit_merge")],
         "table.commit_delta": [(CdcTable, "commit_delta")],
     }
@@ -100,30 +99,60 @@ def _tail(spark, log_dir, lo, hi):
                     upto_lsn=hi)
 
 
+def _narrow(df):
+    """Drop the rows more than LATE_SECONDS behind the batch's max ts:
+    every part of what is left spans at most LATE_SECONDS."""
+    top = df.agg(F.max("ts")).first()[0]
+    return df.filter(F.col("ts") >= F.lit(top - timedelta(seconds=LATE_SECONDS)))
+
+
 def test_small_mor_commit_job_count(spark, log_dir, tmp_path, monkeypatch):
-    """A small MOR commit on a non-empty table: the batch profile (2 jobs:
-    its shuffle stage and the collect) replaces the emptiness probe, the
-    planner's key profile and the metrics max-ts phase; the metrics
-    aggregate is collected and written by the driver (2 jobs, no Spark
-    write job). 9 jobs in all."""
+    """A small MOR commit on a non-empty table whose batch carries late
+    rows: the batch profile (2 jobs: its shuffle stage and the collect)
+    carries every lineage counter; the metrics layer runs only the
+    late-row count (2 jobs) for the parts whose ts spread exceeds
+    LATE_SECONDS; the uncached delta write takes 4. 8 jobs in all."""
     t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
     pipeline.apply_batch(spark, t, _tail(spark, log_dir, -1, 800), "b0",
                          mode="mor")
+    tail = _tail(spark, log_dir, 800, 900)
+    assert tail.count() > _narrow(tail).count()   # it carries late rows
     jobs = LayerJobs(spark, monkeypatch)
     got = jobs.run("mor-b1", lambda: pipeline.apply_batch(
-        spark, t, _tail(spark, log_dir, 800, 900), "b1", mode="mor"))
-    _assert_jobs(got, {"pipeline": 2, "metrics": 2, "table.commit_delta": 5},
+        spark, t, tail, "b1", mode="mor"))
+    _assert_jobs(got, {"pipeline": 2, "metrics": 2, "table.commit_delta": 4},
                  "small MOR apply_batch on a non-empty table")
+
+
+def test_narrow_mor_commit_runs_no_metrics_job(spark, log_dir, tmp_path,
+                                               monkeypatch):
+    """A MOR commit whose batch spans at most LATE_SECONDS: every part's
+    n_late is 0 by the spread rule, so the metrics file is built from the
+    profile rows alone — 0 metrics jobs, 6 in all."""
+    t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
+    pipeline.apply_batch(spark, t, _tail(spark, log_dir, -1, 800), "b0",
+                         mode="mor")
+    tail = _narrow(_tail(spark, log_dir, 800, 900))
+    jobs = LayerJobs(spark, monkeypatch)
+    got = jobs.run("mor-narrow", lambda: pipeline.apply_batch(
+        spark, t, tail, "b1", mode="mor"))
+    _assert_jobs(got, {"pipeline": 2, "table.commit_delta": 4},
+                 "narrow MOR apply_batch on a non-empty table")
+    rows = read_metrics(spark, t.root).filter("batch_key = 'b1'").collect()
+    assert rows and all(r["n_late"] == 0 for r in rows)
 
 
 def test_fresh_full_tail_replay_job_count(spark, log_dir, tmp_path,
                                           monkeypatch):
-    """A full-tail CoW replay into a fresh table: 13 jobs, of which the
-    planner launches none (its broadcast test reads the profile)."""
+    """A full-tail CoW replay into a fresh table: 9 jobs. The planner
+    launches none (its broadcast test reads the profile), and neither does
+    the merge's planning aggregate (touched parts and max lsn come from
+    the profile); the whole log spans more than LATE_SECONDS, so the
+    late-row count runs (2 metrics jobs)."""
     t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
     jobs = LayerJobs(spark, monkeypatch)
     got = jobs.run("replay", lambda: pipeline.replay(spark, log_dir, t))
-    _assert_jobs(got, {"pipeline": 2, "metrics": 2, "table.commit_merge": 9},
+    _assert_jobs(got, {"pipeline": 2, "metrics": 2, "table.commit_merge": 5},
                  "fresh-table full-tail CoW replay")
 
 
@@ -211,6 +240,143 @@ def test_metrics_rewrite_replaces_earlier_files(spark, tmp_path):
     assert rows[0]["n_raw"] == ev.count()
 
 
+def _with_null_ts(spark, ev, t):
+    """``ev`` plus rows with a NULL ts: one key beside real ts in its
+    part, and one key alone in a part no other row reaches (its n_late
+    is NULL)."""
+    used = {r[0] for r in ev.select(t.part_of()).distinct().collect()}
+    cand = spark.createDataFrame(
+        [(f"z{i}", "z.py") for i in range(64)], "repo string, path string")
+    lone = next(r.repo for r in cand.select("repo", t.part_of().alias("p"))
+                .collect() if r.p not in used)
+    extra = spark.createDataFrame(
+        [("r0", "n.py", 10_000, None, "I", "x", 0),
+         ("r0", "n.py", 10_001, None, "U", "y", 0),
+         (lone, "z.py", 10_002, None, "I", "z", 0)],
+        "repo string, path string, lsn long, ts timestamp, op string, "
+        "content string, batch_id long")
+    return ev.unionByName(extra)
+
+
+@pytest.mark.parametrize("shape", ["narrow", "wide", "empty"])
+def test_profile_metrics_equal_spark_counters(spark, tmp_path, shape):
+    """The metrics file a commit builds from its profile rows equals
+    ``batch_lineage_metrics(exact_dedup=False)`` on every counter, NULLs
+    included, under the Arrow schema (nullability too) that the Spark
+    form's toArrow() gives. The empty batch lands on a fresh table as a
+    0-row file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # 32 parts: the 17 keys leave some part free for the lone NULL-ts key
+    t = CdcTable(str(tmp_path / "t"), n_partitions=32, layout="key_hash")
+    ev = _late_events(spark)
+    if shape == "narrow":
+        ev = _narrow(ev)
+    elif shape == "wide":
+        ev = _with_null_ts(spark, ev, t)
+    else:
+        ev = ev.filter(F.lit(False))
+    pipeline.apply_batch(spark, t, ev, "b0", normalize=False)
+    got = pq.read_table(os.path.join(t.root, "metrics", "batch_key=b0",
+                                     cdc_metrics.METRICS_FILE))
+    want = batch_lineage_metrics(ev.withColumn("part", t.part_of()),
+                                 exact_dedup=False).toArrow()
+    assert got.schema == pa.schema([*want.schema,
+                                    pa.field("batch_key", pa.string()),
+                                    pa.field("wall_ms", pa.int32())])
+    by_part = {r["part"]: r for r in got.drop_columns(
+        ["batch_key", "wall_ms"]).to_pylist()}
+    assert by_part == {r["part"]: r for r in want.to_pylist()}
+    late = {r["n_late"] for r in by_part.values()}
+    if shape == "empty":
+        assert got.num_rows == 0
+    elif shape == "narrow":
+        assert late == {0}
+    else:
+        assert None in late and max(x or 0 for x in late) > 0
+
+
+@pytest.mark.parametrize("layout,seeded", [("key_hash", False),
+                                           ("key_hash", True),
+                                           ("repo_hash", True)])
+def test_merge_plan_from_profile_matches_aggregate(spark, log_dir, tmp_path,
+                                                   layout, seeded):
+    """CoW commits planned from the batch profile (metrics on) land what
+    the planning-aggregate path (metrics off: no counters, so no plan)
+    lands: the same rows, tombstones included, the same lsn high-water
+    and the same files per part."""
+    spans = [(-1, 600), (600, 1000)] if seeded else [(-1, 1000)]
+    if seeded:   # the second commit retires standing keys
+        assert _tail(spark, log_dir, 600, 1000).filter("op = 'D'").count()
+    shapes = []
+    for name, metrics in (("profile", True), ("aggregate", False)):
+        t = CdcTable(str(tmp_path / name), n_partitions=4, layout=layout)
+        for i, (lo, hi) in enumerate(spans):
+            pipeline.apply_batch(spark, t, _tail(spark, log_dir, lo, hi),
+                                 f"b{i}", metrics=metrics)
+        snap = t.current_snapshot()
+        shapes.append((
+            snap["lsn_high"],
+            sorted((f["part"], f["rows"], f["lsn_min"], f["lsn_max"],
+                    f["origin"]) for f in snap["files"]),
+            Counter(map(tuple, t.read(spark, include_deleted=True)
+                        .collect()))))
+    assert shapes[0] == shapes[1]
+
+
+def test_two_read_commits_still_cache(spark, tmp_path, monkeypatch):
+    """The collapsed batch is cached exactly when a second action reads
+    it: a CHECK constraint, conflict retries or a part-override guard each
+    cache it, and each commit lands the right rows; a plain profiled
+    commit caches nothing."""
+    from cdc.table import alter
+
+    cls = type(spark.range(1))
+    persisted = []
+    orig = cls.persist
+
+    def persist(self, *a, **kw):
+        persisted.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", persist)
+
+    def batch(lo, tag):
+        rows = [(f"r{i % 3}", f"p{i}.py", lo + i, "I" if lo == 0 else "U",
+                 f"{tag}{i}", i % 2) for i in range(12)]
+        return (spark.createDataFrame(
+            rows, "repo string, path string, lsn long, op string, "
+                  "content string, bucket int")
+            .withColumn("ts", F.timestamp_seconds(F.col("lsn")))
+            .withColumn("batch_id", F.lit(lo).cast("long")))
+
+    def run(t, extra=None, **kw):
+        pipeline.apply_batch(spark, t, batch(0, "a"), "b0", normalize=False,
+                             **kw)
+        if extra:
+            extra(t)
+        persisted.clear()
+        pipeline.apply_batch(spark, t, batch(100, "b"), "b1",
+                             normalize=False, **kw)
+        got = {r.path: r.content for r in t.read(spark).collect()}
+        assert got == {f"p{i}.py": f"b{i}" for i in range(12)}
+        return bool(persisted)
+
+    def table(name, **kw):
+        return CdcTable(str(tmp_path / name), n_partitions=4,
+                        layout="key_hash", **kw)
+
+    assert not run(table("plain"))
+    assert not run(table("plain_mor"), mode="mor")
+    assert run(table("check"),
+               extra=lambda t: alter.set_check(t, "pos", "lsn >= 0"))
+    assert run(table("retry"), conflict_retries=1)
+    for mode in ("cow", "mor"):
+        assert run(table(f"override_{mode}", part_cols=("bucket",)),
+                   mode=mode)
+
+
 def test_empty_tail_on_nonempty_table_commits_nothing(spark, log_dir,
                                                       tmp_path):
     t = CdcTable(str(tmp_path / "t"), n_partitions=4, layout="key_hash")
@@ -238,7 +404,7 @@ def test_profile_planner_matches_exact_planner(spark):
         F.concat(F.lit("p"), F.col("id").cast("string")).alias("path"))
     ev = hot.unionByName(cold)
     prof = batch_profile(ev, F.pmod(F.hash("repo", "path"), F.lit(4)),
-                         max_ts=False)
+                         counters=False)
     assert prof["n_events"] == 20_500
     assert abs(prof["n_keys"] - 501) <= 0.1 * 501
     for kw in ({}, {"broadcast_keys_max": 10},

@@ -267,9 +267,14 @@ def test_mor_reconcile_scoped_to_delta_parts(spark, tmp_path, monkeypatch):
     delta_parts = {int(f["part"]) for f in snap["files"]
                    if f.get("kind") == "delta"}
     assert 0 < len(delta_parts) < 8          # a genuine subset
-    dirty_files = {f["path"].split("/")[-1] for f in snap["files"]
+    # a file is named by its part dir AND basename: one write task that
+    # spans several parts gives every part dir the same part-<task> name
+    def name(path: str) -> str:
+        return "/".join(path.split("/")[-2:])
+
+    dirty_files = {name(f["path"]) for f in snap["files"]
                    if int(f["part"]) in delta_parts}
-    clean_files = {f["path"].split("/")[-1] for f in snap["files"]
+    clean_files = {name(f["path"]) for f in snap["files"]
                    if int(f["part"]) not in delta_parts}
     assert clean_files
 
@@ -277,7 +282,7 @@ def test_mor_reconcile_scoped_to_delta_parts(spark, tmp_path, monkeypatch):
     orig = dedup.last_writer_wins
 
     def capturing(df, *a, **kw):
-        seen["files"] = {p.split("/")[-1] for p in df.inputFiles()}
+        seen["files"] = {name(p) for p in df.inputFiles()}
         return orig(df, *a, **kw)
 
     monkeypatch.setattr(dedup, "last_writer_wins", capturing)

@@ -292,6 +292,54 @@ def test_continuous_dedup_changes_stream(spark, tmp_path):
                      for t in (bands, groups)]
 
 
+def test_changes_stream_compacts_on_cadence(spark, tmp_path):
+    """A 4-epoch MOR change stream with compact_every=2 compacts after
+    epochs 1 and 3: no delta layer of bands or groups is older than the
+    last compaction, and the drained state equals the one-shot
+    recompute."""
+    import re
+
+    from cdc.stream.dedup import (continuous_dedup_changes, dedup_tables,
+                                  ingest_dedup_batch)
+
+    bands, groups = dedup_tables(str(tmp_path / "b"), str(tmp_path / "g"),
+                                 n_partitions=4)
+    docs = dict(_doc(i) for i in range(20))
+    ingest_dedup_batch(spark, bands, groups, _mk(spark, docs), "e0",
+                       mode="mor")
+    final = dict(docs)
+    final[5] = CLUSTER_TEXT
+    del final[16]
+    final[300] = "fresh streamed document body"
+    final[7] = CLUSTER_TEXT
+    epochs = [[(5, "U", CLUSTER_TEXT, docs[5])],
+              [(16, "D", None, docs[16])],
+              [(300, "I", final[300], None)],
+              [(7, "U", CLUSTER_TEXT, docs[7])]]
+    src = tmp_path / "ch"
+    src.mkdir()
+    for k, rows in enumerate(epochs):
+        _changes(spark, rows).coalesce(1).write.parquet(str(src / f"f{k}"))
+    stream = (spark.readStream
+              .schema("doc_id long, op string, text string, "
+                      "text_pre string")
+              .option("maxFilesPerTrigger", 1).parquet(str(src / "*")))
+    continuous_dedup_changes(spark, stream, bands, groups,
+                             checkpoint_dir=str(tmp_path / "ckpt"),
+                             fetch_docs=_fetcher(_mk(spark, final)),
+                             mode="mor", compact_every=2)
+    assert _standing(groups, spark) == _expected_groups(spark, final)
+    for t in (bands, groups):
+        snaps = t.snapshots()
+        last = max(s["snapshot_id"] for s in snaps
+                   if s["operation"] == "compact")
+        assert sum(s["operation"] == "compact" for s in snaps) == 2
+        delta_sids = [int(re.search(r"snap-(\d+)", f["path"]).group(1))
+                      for f in t.current_snapshot()["files"]
+                      if f.get("kind") == "delta"]
+        assert all(sid > last for sid in delta_sids), (last, delta_sids)
+
+
 def test_redelivery_fast_path_without_retire(spark, tmp_path, pipeline):
     """An epoch that retired nothing never commits '{key}-retire' — the
     re-delivery fast path must NOT require it ('-retire' commits strictly
